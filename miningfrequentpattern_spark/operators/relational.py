@@ -234,14 +234,17 @@ def global_row_number(
     in-partition sort — the same work a global sort would do — and
     the relation is never funneled through one task nor shuffled
     twice. Determinism across the plan's two uses of the shuffled
-    leg: the range exchange is planned once and reused
-    (ReusedExchange, asserted in tests/test_plans.py), the
-    within-partition sort is total because `order_exprs` must include
-    a unique tiebreak column, and the id assignment reads that sorted
-    order — so both consumers see identical (_pid, local index)
-    values. Per-partition row counts are capped at 2^33 by the id
-    layout (~8.6 B rows per partition — size num_partitions so
-    partitions stay far under that, which memory demands anyway).
+    leg needs BOTH of these: the within-partition sort is total
+    because `order_exprs` must include a unique tiebreak column, and
+    the range exchange is planned once and reused (ReusedExchange,
+    asserted in tests/test_plans.py). Spark reuses it only when the
+    count leg reads the same columns as the rank leg, i.e. when every
+    input column is an order key: otherwise the count leg prunes the
+    rest, gets its own range exchange, samples its own range bounds,
+    and the offsets stop matching the local ranks. Per-partition row
+    counts are capped at 2^33 by the id layout (~8.6 B rows per
+    partition — size num_partitions so partitions stay far under
+    that, which memory demands anyway).
     """
     if num_partitions is None:
         num_partitions = int(
@@ -1475,20 +1478,23 @@ def mannwhitney_z(
     caller already made; discovering groups from data would need a
     driver-side collect, which this engine bans).
 
-    Shape: NO single-partition window anywhere — the classic
-    midrank computation is a global avg-rank window, replaced here
-    by the two-phase distributed rank (global_row_number) ordered
-    by value, then a per-VALUE aggregate whose avg(rank) IS the
-    midrank. Equal values receive SOME permutation of their rank
-    block, which global_row_number's unique-tiebreak contract
-    normally forbids — here every consumer (avg over the block,
-    per-group counts) is permutation-invariant, so the relaxation
-    is sound and documented rather than accidental. The tie term
-    Σ(t³−t) rides the same aggregate; everything after is
-    value-cardinality sized or scalar. Pins: NULL values are
-    excluded; all-tied inputs (every value equal) make the variance
-    0 and z NULL (the r44 pin); an arm with zero rows yields
-    n = 0 and NULL u/z rather than a crash.
+    Shape: NO single-partition window over the data. A value's
+    midrank is the count of smaller values plus (t+1)/2, t its tie
+    count. The count of smaller values is the value's first row
+    number minus one, from the two-phase distributed rank
+    (global_row_number) ordered by (value, arm). Tied rows receive
+    SOME permutation of their rank block, but the block's first
+    number does not depend on that order. The rank input holds only
+    its two order keys, so global_row_number's count leg reads the
+    same columns as its rank leg and Spark reuses the one range
+    exchange; with any other column the count leg would sample its
+    own range bounds and the offsets would not match. The tie term
+    Σ(t³−t) rides the per-value aggregate; everything after is
+    value-cardinality sized or scalar. Midranks are half-integers, so
+    every sum is exact in float64. Pins: NULL values are excluded;
+    all-tied inputs (every value equal) make the variance 0 and z
+    NULL (the r44 pin); an arm with zero rows yields n = 0 and NULL
+    u/z rather than a crash.
     """
     ga, gb = group_a, group_b
     v = F.col(value_col).cast("double")
@@ -1497,12 +1503,13 @@ def mannwhitney_z(
     base = df.filter(
         v.isNotNull() & ~F.isnan(v) & F.col(group_col).isin(ga, gb)
     ).select(F.col(group_col).alias("_g"), v.alias("_v"))
-    ranked = global_row_number(base, [F.col("_v").asc()], "_rn")
-    # midrank per distinct value = avg of its row numbers (exact for
-    # the average-rank tie convention); tie sizes feed the variance
-    # correction
+    ranked = global_row_number(
+        base, [F.col("_v").asc(), F.col("_g").asc()], "_rn"
+    )
     per_val = ranked.groupBy("_v").agg(
-        F.avg("_rn").alias("_midrank"),
+        ((F.min("_rn") - 1) + (F.count(F.lit(1)) + 1) / 2).alias(
+            "_midrank"
+        ),
         F.count(F.lit(1)).alias("_t"),
         F.sum(F.when(F.col("_g") == F.lit(ga), 1).otherwise(0)).alias(
             "_na_v"

@@ -7,19 +7,19 @@ depends on the row's distance from every earlier row, so the
 "windowed convolution" form is O(len²) per series via
 collect_list+aggregate), and the rescaled-prefix-sum algebraic trick
 (y_t = (1-a)^t · Σ x_i/(1-a)^i) overflows float64 after a few
-thousand steps (1/0.8 ** 2400 = inf). The right seam is the U2
-grouped-map one: shuffle once on the series key, run the recurrence
-vectorized per series — physically a partition-level mapInPandas
-over key-sorted partitions (`_per_group_map_over_sorted_partitions`,
-optimization r11) so the Arrow/Python round-trip is paid per ~10k-row
-batch, not per key, while each series still reaches its recurrence
-as one whole pandas frame.
+thousand steps (1/0.8 ** 2400 = inf). The seam these operators share
+is `_per_group_map_over_sorted_partitions`: shuffle once on the series
+key, sort within partitions, and hand a pandas body one frame per
+Arrow batch that holds only complete series, plus a per-row series
+ordinal. A body vectorised across series (ewma's grouped ewm) pays
+pandas' per-call cost once per batch; a body that needs one series at
+a time wraps it in `_each_series`.
 
-Scale posture: ONE shuffle (the groupBy on the series keys); per-task
-memory is bounded by series LENGTH, not corpus size — a daily-grain
-series is thousands of rows regardless of SF, so millions of series
-parallelize across executors while each recurrence stays in one
-Arrow batch. Skewed series lengths are bounded by the time grain
+Scale posture: ONE shuffle (the repartition on the series keys);
+per-task memory is bounded by one Arrow batch plus the longest
+series, not by corpus size — a daily-grain series is thousands of
+rows regardless of SF, so millions of series parallelize across
+executors. Skewed series lengths are bounded by the time grain
 itself (the same argument as basketize's per-order bound).
 """
 
@@ -43,29 +43,25 @@ def _per_group_map_over_sorted_partitions(
     base: DataFrame,
     keys: Sequence[str],
     sort_cols: Sequence[str],
-    group_fn,
+    batch_fn,
     schema: ST.StructType,
 ) -> DataFrame:
-    """Run a grouped-map body once per SERIES through a partition-level
-    seam: `repartition(keys) + sortWithinPartitions(keys, sort_cols) +
-    mapInPandas`, with contiguous key groups sliced out of each Arrow
-    batch and a group that straddles a batch boundary buffered until
-    complete (per-task memory = one series, the same bound the
-    grouped-map form had per group).
+    """`repartition(keys) + sortWithinPartitions(keys, sort_cols) +
+    mapInPandas`, calling `batch_fn(frame, gid)` once per Arrow batch.
 
-    Optimization r11 (guide §4): `groupBy(keys).applyInPandas` pays
-    one Arrow batch, one pandas frame, and one Python call PER KEY —
-    a few series at sf0.1, millions at 100 TB. This seam pays per
-    ~10k-row Arrow batch on both directions (complete groups of a
-    batch return as ONE concatenated frame) while `group_fn` itself
-    is UNCHANGED — each series still arrives as one whole pandas
-    frame, so results (including RAISE-on-duplicate contracts and
-    bitwise float64 recurrence parity) are identical by construction,
-    not by re-derivation. Same single exchange as groupBy.
+    `frame` holds only COMPLETE series, each as one contiguous run of
+    rows in key-sorted order; `gid` is an int64 array, one entry per
+    row, numbering the frame's series 0, 1, 2, ... in row order. The
+    last series of a batch may continue into the next one, so it is
+    held back and prepended to the next batch (per-task memory = one
+    batch plus one series). `batch_fn` returns the output frame for
+    all of the input's series.
 
     NULL-key handling matches groupBy semantics (all-NULL keys form
-    one group): boundary detection treats adjacent NULLs as equal,
+    one series): boundary detection treats adjacent NULLs as equal,
     whatever their representation (None vs NaN/NaT after Arrow).
+    Bodies that group by series must group on `gid`, not on the key
+    columns: pandas drops NaN group keys.
     """
     key_list = list(keys)
 
@@ -86,26 +82,39 @@ def _per_group_map_over_sorted_partitions(
                 na = pd.isna(arr)
                 neq = neq & ~(na[1:] & na[:-1])
                 bound[1:] |= neq
-            starts = np.flatnonzero(bound)
-            # the last group may continue into the next batch — hold it
-            last_lo = int(starts[-1])
+            # the last series may continue into the next batch — hold it
+            last_lo = int(np.flatnonzero(bound)[-1])
             pending = pdf.iloc[last_lo:].reset_index(drop=True)
-            if len(starts) > 1:
-                done = [
-                    group_fn(
-                        pdf.iloc[int(lo):int(hi)].reset_index(drop=True)
-                    )
-                    for lo, hi in zip(starts[:-1], starts[1:])
-                ]
-                yield pd.concat(done, ignore_index=True)
+            if last_lo:
+                gid = np.cumsum(bound[:last_lo], dtype=np.int64) - 1
+                yield batch_fn(pdf.iloc[:last_lo], gid)
         if pending is not None and len(pending):
-            yield group_fn(pending)
+            yield batch_fn(pending, np.zeros(len(pending), dtype=np.int64))
 
     return (
         base.repartition(*key_list)
         .sortWithinPartitions(*key_list, *sort_cols)
         .mapInPandas(fn, schema)
     )
+
+
+def _each_series(group_fn):
+    """Adapt a one-series body `group_fn(frame) -> frame` to the
+    seam's per-batch contract: slice each series out of the batch,
+    call `group_fn` on it, concatenate the results."""
+
+    def batch_fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
+        starts = np.flatnonzero(np.diff(gid, prepend=-1))
+        ends = np.append(starts[1:], len(pdf))
+        return pd.concat(
+            [
+                group_fn(pdf.iloc[lo:hi].reset_index(drop=True))
+                for lo, hi in zip(starts.tolist(), ends.tolist())
+            ],
+            ignore_index=True,
+        )
+
+    return batch_fn
 
 
 def ewma(
@@ -126,20 +135,24 @@ def ewma(
     Returns the input's (keys, order_col, value_col) columns plus
     `out_col` (double), one row per input row.
 
-    The value column is cast to double BEFORE the grouped map so the
-    Arrow transfer hands pandas a float64 block (a decimal column
-    would arrive as object dtype and fall off the vectorized path).
-    Rows within a series are ordered by `order_col` inside the UDF —
-    shuffle order is not meaningful input order. DUPLICATE order
-    values within a series make the recurrence ambiguous (tied rows
-    would be sequenced by shuffle arrival — run-to-run
-    nondeterminism, review r5): pass `tiebreak_col` to resolve ties
-    deterministically, or leave it None and the operator RAISES on
-    the first tied series. float64 parity with
-    a SQL engine's literal recurrence holds bitwise when alpha and
-    1−alpha round-trip exactly (pandas applies old·(1−a) + new·a per
-    step, the same two multiplies and one add as the SQL form; see
-    tests/test_ewma.py's recursive-CTE oracle).
+    The value column is cast to double BEFORE the seam so the Arrow
+    transfer hands pandas a float64 block (a decimal column would
+    arrive as object dtype and fall off the vectorized path). The seam
+    hands the body one Arrow batch of complete series at a time, and
+    the body computes the whole batch at once: one stable sort on
+    (series ordinal, order_col[, tiebreak_col]) — NULL order values
+    last, where Spark's sort put them first — one duplicate check,
+    and one `groupby(ordinal).ewm(adjust=False)`. Shuffle order is not
+    meaningful input order. DUPLICATE order values within a series
+    make the recurrence ambiguous (tied rows would be sequenced by
+    shuffle arrival — run-to-run nondeterminism): pass `tiebreak_col`
+    to resolve ties deterministically, or leave it None and the
+    operator RAISES. float64 parity with a SQL engine's literal
+    recurrence holds bitwise when alpha and 1−alpha round-trip exactly
+    (pandas applies old·(1−a) + new·a per step, the same two
+    multiplies and one add as the SQL form; see tests/test_ewma.py's
+    recursive-CTE oracle), and the grouped ewm runs the same kernel
+    per series as a one-series `ewm` (tests/test_per_group_seam.py).
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
@@ -166,18 +179,30 @@ def ewma(
     )
     sort_cols = [order_col] + ([tiebreak_col] if tiebreak_col else [])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # kind="mergesort" = stable; with a tiebreak the order is
-        # fully determined, without one any tie is ambiguous → raise.
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        if pdf.duplicated(sort_cols).any():
+    def fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
+        # arrays under positional labels, so no input column name can
+        # collide with a working column
+        order_keys = pd.DataFrame(
+            dict(enumerate([gid, *(pdf[c].array for c in sort_cols)]))
+        )
+        if order_keys.duplicated().any():
             raise ValueError(
                 f"duplicate {sort_cols} within a series: the EWMA "
                 "recurrence is order-ambiguous; pass tiebreak_col or "
                 "pre-aggregate to a unique grain"
             )
-        pdf[out_col] = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
-        return pdf
+        # pandas sorts several columns with a stable lexsort; NaN last
+        # within each series
+        idx = order_keys.sort_values(list(order_keys.columns)).index.to_numpy()
+        out = pdf.take(idx)
+        out[out_col] = (
+            out[value_col]
+            .groupby(gid[idx], sort=False)
+            .ewm(alpha=alpha, adjust=False)
+            .mean()
+            .droplevel(0)
+        )
+        return out
 
     return _per_group_map_over_sorted_partitions(
         base, keys, sort_cols, fn, schema
@@ -1004,7 +1029,7 @@ def holt_linear(
         return pdf
 
     return _per_group_map_over_sorted_partitions(
-        base, keys, sort_cols, fn, schema
+        base, keys, sort_cols, _each_series(fn), schema
     )
 
 
@@ -1427,7 +1452,7 @@ def holt_winters_additive(
         return pdf
 
     return _per_group_map_over_sorted_partitions(
-        base, keys, [order_col], fn, schema
+        base, keys, [order_col], _each_series(fn), schema
     )
 
 

@@ -130,17 +130,15 @@ def t05_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     each user's events still reach it as one whole pandas frame.
     Oracle-checked because the final state is deterministic.
 
-    Optimization r12 (guide §4, VERDICT r11 item 6): the grouped-map
-    `groupBy(user_id).applyInPandas` seam paid one Arrow batch + one
-    Python call PER USER — linear Python-call count in users at
-    100 TB. The partition-level seam
-    (`_per_group_map_over_sorted_partitions`) runs the unchanged
-    per-group function over key-sorted partitions, paying the
-    Python/Arrow round-trip per ~10k-row batch instead; only the two
-    consumed columns cross the boundary. Same single user_id
-    exchange; the streaming twin (tests/test_streaming.py) keeps the
-    applyInPandasWithState semantic demo."""
+    The sorted-partition seam (`_per_group_map_over_sorted_partitions`)
+    runs the per-group function through `_each_series`, paying the
+    Python/Arrow round-trip per Arrow batch rather than per user; only
+    the two consumed columns cross the boundary. Same single user_id
+    exchange as `groupBy(user_id).applyInPandas`; the streaming twin
+    (tests/test_streaming.py) keeps the applyInPandasWithState
+    semantic demo."""
     from ..operators.timeseries import (
+        _each_series,
         _per_group_map_over_sorted_partitions,
     )
 
@@ -161,7 +159,7 @@ def t05_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select("user_id", "event_type"),
         keys=["user_id"],
         sort_cols=[],
-        group_fn=counts,
+        batch_fn=_each_series(counts),
         schema="user_id BIGINT, n_events BIGINT, n_purchases BIGINT",
     )
 

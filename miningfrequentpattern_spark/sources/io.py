@@ -95,12 +95,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views for spark.sql queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_transactions_text(
     spark: SparkSession, path: str, sep: str = " "
 ) -> DataFrame:

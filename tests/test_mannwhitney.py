@@ -1,12 +1,18 @@
 """Distributed Mann–Whitney U test
-(operators/relational.py::mannwhitney_z) — promoted round 6: the oracle moved verbatim onto the r78_click_vs_view_ranksum registration and driver-grade value parity now runs in tests/test_oracle_parity.py; this file keeps (click vs
-view event values), plus closed-form no-tie and tie-corrected hand
-pins. The midrank leg rides the two-phase distributed rank — no
+(operators/relational.py::mannwhitney_z). Driver-grade value parity
+on the r78_click_vs_view_ranksum registration runs in
+tests/test_oracle_parity.py; this file keeps closed-form no-tie and
+tie-corrected hand pins, the NaN / empty-arm / all-tied pins, and a
+pin that the answer does not depend on the shuffle partition count.
+The midrank leg rides the two-phase distributed rank — no
 single-partition window anywhere (the oracle's global row_number is
-the single-process contrast, same stance as l43's naive-form
-oracle)."""
+the single-process contrast)."""
 
 import math
+import random
+
+import pandas as pd
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -86,3 +92,32 @@ def test_mannwhitney_empty_arm_yields_null_u(spark):
     got = mannwhitney_z(df, "g", "v", "a", "b").collect()[0]
     assert (got["n_a"], got["n_b"]) == (2, 0)
     assert got["u_stat"] is None and got["z"] is None
+
+
+@pytest.mark.parametrize("parts", [1, 8, 200])
+def test_mannwhitney_independent_of_shuffle_partitions(spark, parts):
+    """Heavy ties spread over several input partitions: every shuffle
+    partition count gives the pandas average-rank answer exactly."""
+    rng = random.Random(7)
+    rows = [
+        (rng.choice("ab"), float(rng.randrange(400))) for _ in range(4000)
+    ]
+    pdf = pd.DataFrame(rows, columns=["g", "v"])
+    rank = pdf["v"].rank(method="average")
+    is_a = pdf["g"] == "a"
+    na, nb = int(is_a.sum()), int((~is_a).sum())
+    u = rank[is_a].sum() - na * (na + 1) / 2
+    t = pdf["v"].value_counts()
+    n = na + nb
+    var = na * nb / 12.0 * ((n + 1) - (t**3 - t).sum() / (n * (n - 1)))
+    df = spark.createDataFrame(rows, "g string, v double").repartition(6)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        got = mannwhitney_z(df, "g", "v", "a", "b").collect()[0]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert (got["n_a"], got["n_b"]) == (na, nb)
+    assert got["u_stat"] == round(u, 4)
+    assert math.isclose(got["z"], (u - na * nb / 2) / math.sqrt(var),
+                        abs_tol=1e-4)

@@ -1,22 +1,26 @@
-"""The partition-level per-series seam (optimization r11):
-`_per_group_map_over_sorted_partitions` replaced the per-key
-`groupBy().applyInPandas` under ewma / holt_linear /
-holt_winters_additive. Value equivalence vs the DuckDB oracles rides
-tests/test_oracle_parity.py (r52/r82/r89/r90); THIS file pins the
-seam machinery itself — group buffering across Arrow batch
-boundaries, NULL-key grouping, and the RAISE contracts surviving a
-split — by running the same input with the Arrow batch size capped
-tiny (groups straddle batches) vs huge (they never do) and requiring
-identical results.
+"""The sorted-partition seam `_per_group_map_over_sorted_partitions`
+under ewma / holt_linear / holt_winters_additive. Value equivalence
+vs the DuckDB oracles rides tests/test_oracle_parity.py
+(r52/r82/r89/r90); THIS file pins the seam machinery itself — series
+buffering across Arrow batch boundaries, NULL-key grouping, and the
+RAISE contracts surviving a split — by running the same input with
+the Arrow batch size capped tiny (series straddle batches) vs huge
+(they never do) and requiring identical results. It also pins ewma's
+per-batch body bitwise (==, not isclose) to the one-series pandas
+body it replaced, kept below as the reference.
 """
 
 import math
 
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as ST
 
 from miningfrequentpattern_spark.operators.timeseries import (
+    _each_series,
+    _per_group_map_over_sorted_partitions,
     ewma,
     holt_linear,
     holt_winters_additive,
@@ -147,3 +151,146 @@ def test_holt_winters_split_groups_match_unsplit(spark):
     got = _with_batch_cap(spark, 3, run)
     want = _with_batch_cap(spark, 1_000_000, run)
     assert got == want and len(got) == 2 * 20
+
+
+def _reference_ewma(df, keys, order_col, value_col, alpha, tiebreak_col=None):
+    """ewma as it ran before the per-batch body: the same projection
+    and seam, with the one-series pandas body applied series by
+    series."""
+    extra = (
+        [tiebreak_col]
+        if tiebreak_col
+        and tiebreak_col not in (*keys, order_col, value_col)
+        else []
+    )
+    base = df.select(
+        *keys,
+        order_col,
+        *extra,
+        F.col(value_col).cast("double").alias(value_col),
+    )
+    schema = ST.StructType(
+        list(base.schema.fields) + [ST.StructField("ewma", ST.DoubleType())]
+    )
+    sort_cols = [order_col] + ([tiebreak_col] if tiebreak_col else [])
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+        if pdf.duplicated(sort_cols).any():
+            raise ValueError(f"duplicate {sort_cols} within a series")
+        pdf["ewma"] = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
+        return pdf
+
+    return _per_group_map_over_sorted_partitions(
+        base, keys, sort_cols, _each_series(fn), schema
+    )
+
+
+def _exact(rows):
+    """Rows as sortable tuples that compare floats with ==, except
+    that NaN equals NaN (and only NaN)."""
+
+    def cell(v):
+        if isinstance(v, float) and math.isnan(v):
+            return (2, "NaN")
+        return (0, "") if v is None else (1, v)
+
+    return sorted(tuple(cell(v) for v in r) for r in rows)
+
+
+def _edge_rows(spark):
+    """Series of lengths 1..23 plus the all-NULL key series, in one
+    partition so small Arrow caps split them across batches. Values
+    hold NaN and NULL; series "c" has a NULL order value, which
+    pandas places last where Spark's sort put it first."""
+    rows = []
+    for i, (k, n) in enumerate(
+        [("a", 23), ("b", 1), ("c", 9), ("d", 1), ("e", 17), (None, 11)]
+    ):
+        for t in range(n):
+            x = float((t * 37 + i * 101) % 97)
+            if (t + i) % 5 == 3:
+                x = float("nan")
+            elif (t + i) % 7 == 4:
+                x = None
+            rows.append((k, t, x))
+    rows.append(("c", None, 5.0))
+    rows.append((None, None, 8.0))
+    return spark.createDataFrame(rows, "k string, t int, x double").coalesce(1)
+
+
+@pytest.mark.parametrize("cap", [1, 7, None])
+def test_ewma_batch_body_bitwise_equals_per_series(spark, cap):
+    df = _edge_rows(spark)
+
+    def run():
+        got = _exact(ewma(df, ["k"], "t", "x", 0.3).collect())
+        want = _exact(_reference_ewma(df, ["k"], "t", "x", 0.3).collect())
+        return got, want
+
+    got, want = run() if cap is None else _with_batch_cap(spark, cap, run)
+    assert got == want and len(got) == df.count()
+
+
+@pytest.mark.parametrize("cap", [1, 7])
+def test_ewma_batch_body_with_tiebreak_bitwise(spark, cap):
+    # two keys, order ties broken by `tb`, one NULL tiebreak value
+    rows = [
+        (k, j, t // 2, t if t != 4 else None, float(t * 3 % 11))
+        for k in ("p", "q")
+        for j in (0, 1)
+        for t in range(12)
+    ]
+    df = spark.createDataFrame(
+        rows, "k string, j int, t int, tb int, x double"
+    ).coalesce(1)
+
+    def run():
+        return (
+            _exact(ewma(df, ["k", "j"], "t", "x", 0.5, tiebreak_col="tb")
+                   .collect()),
+            _exact(_reference_ewma(df, ["k", "j"], "t", "x", 0.5, "tb")
+                   .collect()),
+        )
+
+    got, want = _with_batch_cap(spark, cap, run)
+    assert got == want and len(got) == 48
+
+
+@pytest.mark.parametrize("tiebreak", ["k", "t"])
+@pytest.mark.parametrize("cap", [1, 2])
+def test_ewma_duplicate_raise_with_tiebreak_across_batches(
+    spark, tiebreak, cap
+):
+    """A tiebreak that is a key or the order column itself cannot
+    break a tie, so the tied pair must still raise when it lands in
+    different Arrow batches."""
+    rows = [("a", t, 1.0) for t in range(10)] + [("a", 5, 2.0)]
+    df = spark.createDataFrame(
+        rows, "k string, t int, x double"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="duplicate"):
+        _with_batch_cap(
+            spark,
+            cap,
+            lambda: ewma(
+                df, ["k"], "t", "x", 0.5, tiebreak_col=tiebreak
+            ).collect(),
+        )
+
+
+def test_ewma_column_names_cannot_collide(spark):
+    """The body keeps its working data in arrays, so input columns
+    named like a series ordinal or a positional label pass through."""
+    df = _edge_rows(spark).select(
+        F.col("k").alias("gid"), F.col("t").alias("0"), F.col("x").alias("1")
+    )
+
+    def run():
+        return (
+            _exact(ewma(df, ["gid"], "0", "1", 0.3).collect()),
+            _exact(_reference_ewma(df, ["gid"], "0", "1", 0.3).collect()),
+        )
+
+    got, want = _with_batch_cap(spark, 7, run)
+    assert got == want and len(got) == df.count()
