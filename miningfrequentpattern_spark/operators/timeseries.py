@@ -7,13 +7,16 @@ depends on the row's distance from every earlier row, so the
 "windowed convolution" form is O(len²) per series via
 collect_list+aggregate), and the rescaled-prefix-sum algebraic trick
 (y_t = (1-a)^t · Σ x_i/(1-a)^i) overflows float64 after a few
-thousand steps (1/0.8 ** 2400 = inf). The seam these operators share
-is `_per_group_map_over_sorted_partitions`: shuffle once on the series
-key, sort within partitions, and hand a pandas body one frame per
-Arrow batch that holds only complete series, plus a per-row series
-ordinal. A body vectorised across series (ewma's grouped ewm) pays
-pandas' per-call cost once per batch; a body that needs one series at
-a time wraps it in `_each_series`.
+thousand steps (1/0.8 ** 2400 = inf). The seam ewma, holt_linear,
+holt_winters_additive and ttl_dedup share is
+`_per_group_map_over_sorted_partitions`: shuffle once on the series
+key, sort within partitions (order columns NULLs last), raise on a
+tied order, and hand a pandas body one frame per Arrow batch that
+holds only complete series, plus a per-row series ordinal. The seam
+alone delimits and orders series; no body re-sorts or re-checks ties.
+A body vectorised across series (ewma's grouped ewm) pays pandas'
+per-call cost once per batch; a body that needs one series at a time
+wraps it in `_each_series`.
 
 Scale posture: ONE shuffle (the repartition on the series keys);
 per-task memory is bounded by one Arrow batch plus the longest
@@ -39,6 +42,14 @@ from ..functions.guards import reject_working_cols as _reject_working_cols
 from ..functions.rounding import round4
 
 
+def _adjacent_equal(arr: np.ndarray) -> np.ndarray:
+    """NULL-safe equality of each row with the next (length n−1):
+    adjacent NULLs are equal whatever their representation after
+    Arrow (None vs NaN/NaT)."""
+    na = pd.isna(arr)
+    return (arr[1:] == arr[:-1]) | (na[1:] & na[:-1])
+
+
 def _per_group_map_over_sorted_partitions(
     base: DataFrame,
     keys: Sequence[str],
@@ -46,24 +57,32 @@ def _per_group_map_over_sorted_partitions(
     batch_fn,
     schema: ST.StructType,
 ) -> DataFrame:
-    """`repartition(keys) + sortWithinPartitions(keys, sort_cols) +
-    mapInPandas`, calling `batch_fn(frame, gid)` once per Arrow batch.
+    """Repartition on `keys`, sort each partition on `keys` then
+    `sort_cols` (NULLs last), and map the partition in pandas, calling
+    `batch_fn(frame, gid)` once per Arrow batch. The seam alone
+    decides how a series is delimited and ordered; bodies never
+    re-sort.
 
     `frame` holds only COMPLETE series, each as one contiguous run of
-    rows in key-sorted order; `gid` is an int64 array, one entry per
-    row, numbering the frame's series 0, 1, 2, ... in row order. The
-    last series of a batch may continue into the next one, so it is
-    held back and prepended to the next batch (per-task memory = one
-    batch plus one series). `batch_fn` returns the output frame for
-    all of the input's series.
+    rows ordered by `sort_cols` (NULLs last, the order pandas'
+    `sort_values` gives); `gid` is an int64 array, one entry per row,
+    numbering the frame's series 0, 1, 2, ... in row order. The last
+    series of a batch may continue into the next one, so it is held
+    back and prepended to the next batch (per-task memory = one batch
+    plus one series). `batch_fn` returns the output frame for all of
+    the input's series.
 
     NULL-key handling matches groupBy semantics (all-NULL keys form
-    one series): boundary detection treats adjacent NULLs as equal,
-    whatever their representation (None vs NaN/NaT after Arrow).
-    Bodies that group by series must group on `gid`, not on the key
-    columns: pandas drops NaN group keys.
+    one series). Bodies that group by series must group on `gid`, not
+    on the key columns: pandas drops NaN group keys.
+
+    When `sort_cols` is non-empty they must order each series
+    totally: two adjacent rows of one series that are equal (NULL-
+    safe) on every sort column RAISE, since tied rows would be
+    sequenced by shuffle arrival. Pass a tiebreak column or
+    pre-aggregate to a unique grain.
     """
-    key_list = list(keys)
+    key_list, sort_list = list(keys), list(sort_cols)
 
     def fn(batches):
         pending: pd.DataFrame | None = None
@@ -72,30 +91,44 @@ def _per_group_map_over_sorted_partitions(
                 continue
             if pending is not None:
                 pdf = pd.concat((pending, pdf), ignore_index=True)
-                pending = None
-            n = len(pdf)
-            bound = np.zeros(n, dtype=bool)
-            bound[0] = True
+            same = np.ones(len(pdf) - 1, dtype=bool)
             for k in key_list:
-                arr = pdf[k].to_numpy()
-                neq = arr[1:] != arr[:-1]
-                na = pd.isna(arr)
-                neq = neq & ~(na[1:] & na[:-1])
-                bound[1:] |= neq
+                same &= _adjacent_equal(pdf[k].to_numpy())
+            if sort_list:
+                tied = same.copy()
+                for c in sort_list:
+                    tied &= _adjacent_equal(pdf[c].to_numpy())
+                if tied.any():
+                    raise ValueError(
+                        f"duplicate {sort_list} within a series of "
+                        f"{key_list}: the series is order-ambiguous; "
+                        "pass tiebreak_col or pre-aggregate to a unique "
+                        "grain"
+                    )
+            bound = np.concatenate(([True], ~same))
             # the last series may continue into the next batch — hold it
             last_lo = int(np.flatnonzero(bound)[-1])
             pending = pdf.iloc[last_lo:].reset_index(drop=True)
             if last_lo:
                 gid = np.cumsum(bound[:last_lo], dtype=np.int64) - 1
                 yield batch_fn(pdf.iloc[:last_lo], gid)
-        if pending is not None and len(pending):
+        if pending is not None:
             yield batch_fn(pending, np.zeros(len(pending), dtype=np.int64))
 
     return (
         base.repartition(*key_list)
-        .sortWithinPartitions(*key_list, *sort_cols)
+        .sortWithinPartitions(
+            *key_list, *(F.col(c).asc_nulls_last() for c in sort_list)
+        )
         .mapInPandas(fn, schema)
     )
+
+
+def _series_slices(gid: np.ndarray) -> list[tuple[int, int]]:
+    """The (lo, hi) row range of each series in a seam frame."""
+    starts = np.flatnonzero(np.diff(gid, prepend=-1))
+    ends = np.append(starts[1:], len(gid))
+    return list(zip(starts.tolist(), ends.tolist()))
 
 
 def _each_series(group_fn):
@@ -104,12 +137,10 @@ def _each_series(group_fn):
     call `group_fn` on it, concatenate the results."""
 
     def batch_fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
-        starts = np.flatnonzero(np.diff(gid, prepend=-1))
-        ends = np.append(starts[1:], len(pdf))
         return pd.concat(
             [
                 group_fn(pdf.iloc[lo:hi].reset_index(drop=True))
-                for lo, hi in zip(starts.tolist(), ends.tolist())
+                for lo, hi in _series_slices(gid)
             ],
             ignore_index=True,
         )
@@ -138,21 +169,18 @@ def ewma(
     The value column is cast to double BEFORE the seam so the Arrow
     transfer hands pandas a float64 block (a decimal column would
     arrive as object dtype and fall off the vectorized path). The seam
-    hands the body one Arrow batch of complete series at a time, and
-    the body computes the whole batch at once: one stable sort on
-    (series ordinal, order_col[, tiebreak_col]) — NULL order values
-    last, where Spark's sort put them first — one duplicate check,
-    and one `groupby(ordinal).ewm(adjust=False)`. Shuffle order is not
-    meaningful input order. DUPLICATE order values within a series
-    make the recurrence ambiguous (tied rows would be sequenced by
-    shuffle arrival — run-to-run nondeterminism): pass `tiebreak_col`
-    to resolve ties deterministically, or leave it None and the
-    operator RAISES. float64 parity with a SQL engine's literal
-    recurrence holds bitwise when alpha and 1−alpha round-trip exactly
-    (pandas applies old·(1−a) + new·a per step, the same two
-    multiplies and one add as the SQL form; see tests/test_ewma.py's
-    recursive-CTE oracle), and the grouped ewm runs the same kernel
-    per series as a one-series `ewm` (tests/test_per_group_seam.py).
+    orders each series by (order_col[, tiebreak_col]), NULL order
+    values last, and hands the body one Arrow batch of complete series
+    at a time; the body is one `groupby(series ordinal).ewm(adjust=
+    False)` over the whole batch. DUPLICATE order values within a
+    series make the recurrence ambiguous: the seam RAISES on them
+    unless `tiebreak_col` resolves the tie. float64 parity with a SQL
+    engine's literal recurrence holds bitwise when alpha and 1−alpha
+    round-trip exactly (pandas applies old·(1−a) + new·a per step, the
+    same two multiplies and one add as the SQL form; see
+    tests/test_ewma.py's recursive-CTE oracle), and the grouped ewm
+    runs the same kernel per series as a one-series `ewm`
+    (tests/test_per_group_seam.py).
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
@@ -180,24 +208,10 @@ def ewma(
     sort_cols = [order_col] + ([tiebreak_col] if tiebreak_col else [])
 
     def fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
-        # arrays under positional labels, so no input column name can
-        # collide with a working column
-        order_keys = pd.DataFrame(
-            dict(enumerate([gid, *(pdf[c].array for c in sort_cols)]))
-        )
-        if order_keys.duplicated().any():
-            raise ValueError(
-                f"duplicate {sort_cols} within a series: the EWMA "
-                "recurrence is order-ambiguous; pass tiebreak_col or "
-                "pre-aggregate to a unique grain"
-            )
-        # pandas sorts several columns with a stable lexsort; NaN last
-        # within each series
-        idx = order_keys.sort_values(list(order_keys.columns)).index.to_numpy()
-        out = pdf.take(idx)
+        out = pdf.copy(deep=False)
         out[out_col] = (
-            out[value_col]
-            .groupby(gid[idx], sort=False)
+            pdf[value_col]
+            .groupby(gid, sort=False)
             .ewm(alpha=alpha, adjust=False)
             .mean()
             .droplevel(0)
@@ -950,9 +964,10 @@ def holt_linear(
     level = x and trend = NULL (never 0.0 — a fabricated flat trend
     is a wrong forecast, not a safe default).
 
-    The recurrence is ewma's grouped-map shape (Arrow float64 block,
-    in-UDF ordering by `order_col`, duplicate order keys RAISE unless
-    `tiebreak_col` disambiguates) with an explicit per-step loop:
+    The recurrence runs in ewma's seam (Arrow float64 block, series
+    ordered by the seam on (order_col[, tiebreak_col]) with NULL order
+    values last, duplicate order keys RAISE unless `tiebreak_col`
+    disambiguates) with an explicit per-step loop:
     pandas has no two-state ewm, and the explicit loop is what makes
     the arithmetic BITWISE the recursive-CTE oracle's — each step is
     the same two fused expressions in the same order, and α/β are
@@ -967,8 +982,6 @@ def holt_linear(
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     if not 0.0 < beta <= 1.0:
         raise ValueError(f"beta must be in (0, 1], got {beta}")
-    import numpy as np
-
     # The tiebreak may BE the value column, the order column, or a
     # key (the ewma r8 guard, widened here in the r10 sweep — the
     # value-only check re-exposed the duplicate-label crash for
@@ -1000,13 +1013,6 @@ def holt_linear(
     one_m_a, one_m_b = 1.0 - alpha, 1.0 - beta
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        if pdf.duplicated(sort_cols).any():
-            raise ValueError(
-                f"duplicate {sort_cols} within a series: the Holt "
-                "recurrence is order-ambiguous; pass tiebreak_col or "
-                "pre-aggregate to a unique grain"
-            )
         x = pdf[value_col].to_numpy(dtype="float64")
         n = len(x)
         lv = np.empty(n, dtype="float64")
@@ -1185,23 +1191,18 @@ def ttl_dedup(
     `a ← ts if ts ≥ a + ttl` has no prefix-sum closed form because
     the condition reads the anchor).
 
-    Optimization r11 (guide §4): the seam is a PARTITION-level
-    mapInPandas over key-sorted partitions, not a per-key
-    applyInPandas — the old form paid one Arrow batch, one pandas
-    frame, and one Python call per KEY (1,500 at sf0.1; millions at
-    100 TB), the new one pays per ~10k-row Arrow batch and walks the
-    contiguous key groups with numpy views, with the chain itself a
-    searchsorted JUMP per kept row instead of a Python loop per
-    input row. Identical results (A/B'd at every SF,
-    scripts/ttl_ab.py) through the same single exchange.
-
-    One shuffle on the key, per-task
-    state = one anchor timestamp, series length bounded by the key's
-    event count. A recursive-CTE oracle computes the identical chain
-    (the r82/r28 stance). Ordering: (ts, tiebreak) must be a total
-    order per key — tied timestamps without a tiebreak RAISE (the
-    ewma contract; which tied row anchors the window is otherwise
-    shuffle-order nondeterminism).
+    The seam (`_per_group_map_over_sorted_partitions`) shuffles once on
+    the key and orders each key's rows by (ts, tiebreak), NULL
+    tiebreaks last; the body walks each complete series of an Arrow
+    batch with `_chain`, a searchsorted JUMP per kept row rather than
+    a Python step per input row. Per-task state = one batch plus one
+    series; nothing is carried between series. A recursive-CTE oracle
+    computes the identical chain (the r82/r28 stance; its `ORDER BY
+    epoch_us(ts), event_id` also puts NULL tiebreaks last). Ordering:
+    (ts, tiebreak) must be a total order per key — tied timestamps
+    without a tiebreak, or with tiebreaks equal or both NULL, RAISE
+    (the ewma contract; which tied row anchors the window is
+    otherwise shuffle-order nondeterminism).
     """
     ttl_us = duration_us(ttl, what="ttl")
     # The tiebreak may already ride in keys/carry or BE the ts column
@@ -1234,9 +1235,8 @@ def ttl_dedup(
         if tiebreak_col and tiebreak_col != ts_col
         else []
     )
-    key_list = list(keys)
 
-    def _chain(us: "np.ndarray") -> "np.ndarray":
+    def _chain(us: np.ndarray) -> np.ndarray:
         """Greedy TTL chain over one key's SORTED epoch-micros: next
         kept index found by a searchsorted jump, so the Python-level
         loop runs once per KEPT row (numpy-C per step), never once
@@ -1250,101 +1250,18 @@ def ttl_dedup(
             i = nxt if nxt > i else i + 1
         return kept
 
-    def _keys_eq(a, b) -> bool:
-        if a is None or b is None:
-            return False
-        return all(
-            (pd.isna(x) and pd.isna(y)) or x == y for x, y in zip(a, b)
-        )
+    def fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
+        us = pdf["_us"].to_numpy()
+        kept = np.zeros(len(pdf), dtype=bool)
+        for lo, hi in _series_slices(gid):
+            kept[lo:hi] = _chain(us[lo:hi])
+        out = pdf.copy(deep=False)
+        out["is_kept"] = kept
+        return out
 
-    def fn(batches):
-        # Partition-level processing (optimization r11, guide §4):
-        # the old per-group applyInPandas paid one Arrow batch + one
-        # pandas frame + one Python call PER KEY (1,500 keys at
-        # sf0.1); this form pays one per ~10k-row Arrow batch and
-        # walks the key groups with numpy views. Rows arrive sorted
-        # by (keys, sort_cols) within the partition, so groups are
-        # contiguous (boundary = any key column changes, NULL-safe);
-        # a group split across adjacent batches continues its chain
-        # via the carried (key, anchor, last-sort) state.
-        carry_key = None
-        carry_anchor = None
-        carry_sort = None
-        for pdf in batches:
-            n_rows = len(pdf)
-            if n_rows == 0:
-                continue
-            kept_out = np.zeros(n_rows, dtype=bool)
-            us_all = pdf["_us"].to_numpy()
-            tb_all = (
-                pdf[sort_cols[1]].to_numpy()
-                if len(sort_cols) > 1
-                else None
-            )
-            bound = np.zeros(n_rows, dtype=bool)
-            bound[0] = True
-            for k in key_list:
-                arr = pdf[k].to_numpy()
-                # exact adjacent inequality (no shift()'s int→float
-                # coercion); a NaN-key run false-splits here and is
-                # healed by the carry continuation below (pd.isna
-                # equality in _keys_eq), exactly like a batch split
-                bound[1:] |= arr[1:] != arr[:-1]
-            starts = np.flatnonzero(bound)
-            ends = np.append(starts[1:], n_rows)
-            key_rows = pdf[key_list].to_numpy(dtype=object)
-            for lo, hi in zip(starts, ends):
-                lo, hi = int(lo), int(hi)
-                us = us_all[lo:hi]
-                dup = us[1:] == us[:-1]
-                if tb_all is not None:
-                    dup &= tb_all[lo + 1 : hi] == tb_all[lo : hi - 1]
-                if dup.any():
-                    raise ValueError(
-                        f"duplicate {sort_cols} within a key: the TTL "
-                        "chain is order-ambiguous; pass tiebreak_col "
-                        "or pre-aggregate"
-                    )
-                gkey = tuple(key_rows[lo])
-                first_sort = (
-                    (us[0],) if tb_all is None else (us[0], tb_all[lo])
-                )
-                if _keys_eq(gkey, carry_key):
-                    # boundary continuation: duplicate check across
-                    # the split, then resume from the carried anchor
-                    if carry_sort == first_sort:
-                        raise ValueError(
-                            f"duplicate {sort_cols} within a key: the "
-                            "TTL chain is order-ambiguous; pass "
-                            "tiebreak_col or pre-aggregate"
-                        )
-                    start = int(
-                        np.searchsorted(us, carry_anchor + ttl_us)
-                    )
-                    kept = np.zeros(us.size, dtype=bool)
-                    if start < us.size:
-                        kept[start:] = _chain(us[start:])
-                        carry_anchor = int(us[kept][-1])
-                    # else: every row still inside the carried TTL —
-                    # nothing kept, anchor unchanged
-                else:
-                    kept = _chain(us)
-                    carry_anchor = int(us[kept][-1])
-                kept_out[lo:hi] = kept
-                carry_key = gkey
-                carry_sort = (
-                    (us[-1],)
-                    if tb_all is None
-                    else (us[-1], tb_all[hi - 1])
-                )
-            pdf = pdf.copy(deep=False)
-            pdf["is_kept"] = kept_out
-            yield pdf
-
-    out = base.repartition(*keys).sortWithinPartitions(
-        *key_list, *sort_cols
-    ).mapInPandas(fn, schema)
-    return out.drop("_us")
+    return _per_group_map_over_sorted_partitions(
+        base, keys, sort_cols, fn, schema
+    ).drop("_us")
 
 
 def holt_winters_additive(
@@ -1375,16 +1292,17 @@ def holt_winters_additive(
     r82's Holt mis-track: both lag every weekend dip; the seasonal
     term absorbs it.
 
-    Shape: the ewma/holt grouped-map seam — ONE shuffle on the series
-    keys, per-task state = (l, b, m-slot buffer), series length
-    bounded by the calendar grain. Arithmetic parity: the per-step
+    Shape: the ewma/holt seam — ONE shuffle on the series keys, each
+    series ordered by order_col (NULLs last) before the body sees it,
+    per-task state = (l, b, m-slot buffer), series length bounded by
+    the calendar grain. Arithmetic parity: the per-step
     expressions are written in EXACTLY the oracle's operation order
     (sequential sum()/m means, not numpy pairwise means), so a
     recursive CTE carrying the seasonal buffer as a LIST streams
     bitwise-identical float64 (the r82 stance). Series shorter than
     2m raise (the init needs two full seasons; a silent NULL would
-    look like a flat model). Ties in order_col raise (the ewma
-    contract).
+    look like a flat model). Ties in order_col raise in the seam (the
+    ewma contract).
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
@@ -1416,12 +1334,6 @@ def holt_winters_additive(
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([order_col], kind="mergesort")
-        if pdf.duplicated([order_col]).any():
-            raise ValueError(
-                f"duplicate {order_col} within a series: the recurrence "
-                "is order-ambiguous; pre-aggregate to a unique grain"
-            )
         x = list(pdf[value_col])
         n = len(x)
         if n < 2 * m:

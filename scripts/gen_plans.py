@@ -1,7 +1,8 @@
 """Regenerate PLANS.md: .explain("formatted") evidence for the scale
 claims asserted in tests/test_plans.py.
 
-Usage: python scripts/gen_plans.py   (writes PLANS.md at the repo root)
+Usage: python scripts/gen_plans.py   (writes PLANS.md at the repo root;
+the file is generated on demand and git-ignored)
 """
 
 from __future__ import annotations

@@ -1,13 +1,14 @@
 """The sorted-partition seam `_per_group_map_over_sorted_partitions`
-under ewma / holt_linear / holt_winters_additive. Value equivalence
-vs the DuckDB oracles rides tests/test_oracle_parity.py
-(r52/r82/r89/r90); THIS file pins the seam machinery itself — series
-buffering across Arrow batch boundaries, NULL-key grouping, and the
-RAISE contracts surviving a split — by running the same input with
-the Arrow batch size capped tiny (series straddle batches) vs huge
-(they never do) and requiring identical results. It also pins ewma's
-per-batch body bitwise (==, not isclose) to the one-series pandas
-body it replaced, kept below as the reference.
+under ewma / holt_linear / holt_winters_additive / ttl_dedup. Value
+equivalence vs the DuckDB oracles rides tests/test_oracle_parity.py
+(r52/r82/r87/r89/r90); THIS file pins the seam machinery itself —
+series buffering across Arrow batch boundaries, NULL-key grouping,
+NULL order values last, and the tied-order RAISE surviving a split —
+by running the same input with the Arrow batch size capped tiny
+(series straddle batches) vs huge (they never do) and requiring
+identical results. It also pins ewma's per-batch body bitwise (==,
+not isclose) to the one-series pandas body it replaced, kept below
+as the reference.
 """
 
 import math
@@ -24,6 +25,7 @@ from miningfrequentpattern_spark.operators.timeseries import (
     ewma,
     holt_linear,
     holt_winters_additive,
+    ttl_dedup,
 )
 
 BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -107,22 +109,115 @@ def test_holt_split_groups_match_unsplit(spark):
     for i, k in enumerate(["p", "q", "r"]):
         rows += [(k, t, float((t * 13 + i * 7) % 31)) for t in range(25)]
     rows.append(("single", 0, 42.0))  # the n==1 NULL-trend contract
+    rows.append(("p", None, 3.0))  # a NULL order value sorts last
     df = spark.createDataFrame(
         rows, "k string, t int, x double"
     ).coalesce(1)
 
     def run():
         return sorted(
-            (r["k"], r["t"], r["level"], r["trend"])
-            for r in holt_linear(
-                df, ["k"], "t", "x", alpha=0.2, beta=0.3
-            ).collect()
+            (
+                (r["k"], r["t"], r["level"], r["trend"])
+                for r in holt_linear(
+                    df, ["k"], "t", "x", alpha=0.2, beta=0.3
+                ).collect()
+            ),
+            key=lambda r: (r[0], r[1] is None, r[1] or 0),
         )
 
     got = _with_batch_cap(spark, 4, run)
     want = _with_batch_cap(spark, 1_000_000, run)
-    assert got == want and len(got) == 3 * 25 + 1
+    assert got == want and len(got) == 3 * 25 + 2
     assert ("single", 0, 42.0, None) in got
+    # the NULL-order row is p's last step, after t = 24
+    (_, _, level, trend), (_, t_null, level_null, _) = [
+        r for r in got if r[0] == "p"
+    ][-2:]
+    assert t_null is None
+    assert level_null == 0.2 * 3.0 + (1.0 - 0.2) * (level + trend)
+
+
+def _ttl_rows(spark):
+    """Three named users and the NULL user, 19 events each, in one
+    partition so small Arrow caps split every chain across batches.
+    Gaps of 0-8 minutes make a 10-minute TTL both keep and drop; a
+    0-minute gap is a ts tie broken by event_id. Each user's first
+    event also ties with a NULL-event_id row, which must sort after
+    it, so the first event anchors the chain."""
+    rows, eid = [], 0
+    for i, k in enumerate(["a", "b", "c", None]):
+        m, series = 0, []
+        for j in range(19):
+            m += (j * 7 + i * 3) % 9
+            series.append((k, m, eid))
+            eid += 1
+        rows += series + [(k, series[0][1], None)]
+    return spark.createDataFrame(
+        rows, "user_id string, m int, event_id long"
+    ).select(
+        "user_id",
+        F.timestamp_seconds(F.col("m") * 60).alias("ts"),
+        "m",
+        "event_id",
+    ).coalesce(1)
+
+
+def _greedy_ttl(rows, ttl_min):
+    """The TTL chain by a plain scan per user, ordered by (minute,
+    event_id) with NULL event_ids last: {(user, event_id, m): kept}."""
+    by_user = {}
+    for u, m, e in rows:
+        by_user.setdefault(u, []).append((m, e))
+    out = {}
+    for u, evs in by_user.items():
+        anchor = None
+        order = sorted(evs, key=lambda r: (r[0], r[1] is None, r[1] or 0))
+        for m, e in order:
+            keep = anchor is None or m >= anchor + ttl_min
+            if keep:
+                anchor = m
+            out[(u, e, m)] = keep
+    return out
+
+
+@pytest.mark.parametrize("cap", [1, 7, None])
+def test_ttl_split_groups_match_greedy_chain(spark, cap):
+    """ttl_dedup through the seam equals a plain greedy scan whether
+    or not chains straddle Arrow batches, the NULL user's chain
+    included."""
+    df = _ttl_rows(spark)
+
+    def run():
+        return {
+            (r["user_id"], r["event_id"], r["m"]): r["is_kept"]
+            for r in ttl_dedup(
+                df, ["user_id"], "ts", "10 minutes",
+                tiebreak_col="event_id", carry=("m",),
+            ).collect()
+        }
+
+    got = run() if cap is None else _with_batch_cap(spark, cap, run)
+    rows = [(r["user_id"], r["m"], r["event_id"]) for r in df.collect()]
+    want = _greedy_ttl(rows, 10)
+    assert got == want and len(got) == 4 * 20
+    assert any(k for (u, _, _), k in got.items() if u is None)
+    assert not all(got.values())
+
+
+@pytest.mark.parametrize("cap", [1, 7, None])
+def test_ttl_duplicate_raise_survives_batch_split(spark, cap):
+    """The tied pair sits at sorted positions 6 and 7, so at caps 1
+    and 7 its rows land in different Arrow batches."""
+    rows = [("a", t) for t in range(10)] + [("a", 6)]
+    df = spark.createDataFrame(rows, "k string, t int").select(
+        "k", F.timestamp_seconds(F.col("t") * 60).alias("ts")
+    ).coalesce(1)
+
+    def run():
+        return ttl_dedup(df, ["k"], "ts", "10 minutes").collect()
+
+    with pytest.raises(Exception, match="duplicate"):
+        run() if cap is None else _with_batch_cap(spark, cap, run)
 
 
 def test_holt_winters_split_groups_match_unsplit(spark):

@@ -390,3 +390,75 @@ def test_ttl_tiebreak_in_carry_or_ts_does_not_duplicate(spark):
     assert out.count() == 2 and out.columns.count("event_id") == 1
     out2 = ttl_dedup(df, ["user_id"], "ts", "10 minutes", tiebreak_col="ts")
     assert out2.count() == 2
+
+
+def test_ttl_dedup_tie_with_both_tiebreaks_null_raises(spark):
+    """A tied ts whose long tiebreak is NULL on both rows is still a
+    tie: the two rows are equal on every order column, NULL-safely."""
+    df = spark.createDataFrame(
+        [
+            ("u", "2024-01-01 00:00:00", None),
+            ("u", "2024-01-01 00:00:00", None),
+            ("u", "2024-01-01 00:20:00", 3),
+        ],
+        "user_id string, d string, event_id long",
+    ).select("user_id", F.to_timestamp("d").alias("ts"), "event_id")
+    with pytest.raises(Exception, match="duplicate"):
+        ttl_dedup(
+            df, ["user_id"], "ts", "10 minutes", tiebreak_col="event_id"
+        ).collect()
+
+
+def test_ttl_dedup_null_tiebreak_sorts_last_like_oracle(spark):
+    """At a tied ts the row with a non-NULL tiebreak comes first and
+    anchors the chain, as in the r87 recursive CTE (`ORDER BY
+    epoch_us(ts), event_id`, NULLS LAST), run in DuckDB on the same
+    rows."""
+    import duckdb
+    import pandas as pd
+
+    from miningfrequentpattern_spark.queries.registry import (
+        ORACLES,
+        load_all_packs,
+    )
+
+    load_all_packs()
+    rows = [
+        ("u", "2024-01-01 00:00:00", None),
+        ("u", "2024-01-01 00:00:00", 2),
+        ("u", "2024-01-01 00:05:00", 3),
+        ("u", "2024-01-01 00:12:00", None),
+        ("u", "2024-01-01 00:12:00", 5),
+        ("v", "2024-01-01 00:00:00", 6),
+        ("v", "2024-01-01 00:00:00", None),
+        ("v", "2024-01-01 00:10:00", 8),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id string, d string, event_id long"
+    ).select("user_id", F.to_timestamp("d").alias("ts"), "event_id")
+    got = {
+        (r["user_id"], str(r["ts"]), r["event_id"], r["is_kept"])
+        for r in ttl_dedup(
+            df, ["user_id"], "ts", "10 minutes", tiebreak_col="event_id"
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.register(
+        "events",
+        pd.DataFrame(
+            {
+                "user_id": [r[0] for r in rows],
+                "ts": pd.to_datetime([r[1] for r in rows]),
+                "event_id": pd.array([r[2] for r in rows], dtype="Int64"),
+            }
+        ),
+    )
+    want = {
+        (u, str(ts), e, k)
+        for u, ts, e, k in con.execute(ORACLES["r87_ttl_dedup"]).fetchall()
+    }
+    assert got == want
+    # the non-NULL row of each tied pair is the one kept
+    assert ("u", "2024-01-01 00:00:00", 2, True) in got
+    assert ("u", "2024-01-01 00:12:00", 5, True) in got
+    assert ("v", "2024-01-01 00:00:00", 6, True) in got
