@@ -1,30 +1,47 @@
-"""Shared lineage-truncation seam for the iterative operators
-(connected components, k-core, PageRank): every loop must truncate
-per round — a cache-only loop doubles the ANALYZED plan every round
-and Catalyst planning itself goes exponential (measured, see
-dedup.connected_components) — but HOW it truncates is a
-fault-tolerance choice the caller owns:
+"""Storage for the iterative operators (connected components, k-core,
+k-truss, PageRank, BFS, Bellman-Ford, label propagation, Apriori, BPE).
+
+An iterative operator holds its storage in a `Scope`:
+
+    with ckpt.Scope(durable) as s:
+        e = s.cache(edges)           # read every round
+        cur = s.pin(first_round)     # one generation
+        for ...:
+            nxt = s.pin(step(cur))
+            s.release(cur)           # the loop retires a generation
+            cur = nxt
+        return s.keep(cur)           # the one handle the caller gets
+
+Leaving the block frees every cache and pin the scope still holds,
+whether the block returned or raised, except the handle passed to
+`keep`. Each loop still decides when a generation retires; the scope
+only owns how long storage lives.
+
+Every loop must truncate lineage per round: a cache-only loop doubles
+the ANALYZED plan every round and Catalyst planning itself goes
+exponential (measured, see dedup.connected_components). HOW it
+truncates is a fault-tolerance choice the caller owns:
 
 - durable=False (default): `localCheckpoint` — executor-storage pin,
   zero extra infrastructure, NOT recoverable on executor loss. The
-  right default for interactive/derived results (the documented
-  trade in the r4 verdict and every docstring that pins).
+  right default for interactive/derived results.
 - durable=True: reliable `checkpoint` to the SparkContext's
   checkpoint directory — survives executor loss, costs a write+read
-  of the state per round. The durable-pipeline path the r4 advice
-  asked to exist: long multi-hour jobs should pass durable=True and
-  point `spark.sparkContext.setCheckpointDir` at job-scoped durable
-  storage (HDFS/S3). If no directory is set, a local temp dir is
-  used so the mode works out of the box on local[*] — that default
-  is durability against executor loss, not against machine loss;
-  set a real directory on a cluster. Checkpoint FILES are reclaimed
-  by `spark.cleaner.referenceTracking.cleanCheckpoints=true` (set in
+  of the state per round. Long multi-hour jobs should pass
+  durable=True and point `spark.sparkContext.setCheckpointDir` at
+  job-scoped durable storage (HDFS/S3). If no directory is set, a
+  local temp dir is used so the mode works out of the box on
+  local[*] — that default is durability against executor loss, not
+  against machine loss; set a real directory on a cluster.
+  Checkpoint FILES are reclaimed by
+  `spark.cleaner.referenceTracking.cleanCheckpoints=true` (set in
   session.get_session) once the RDD is GC'd, or with the directory.
 """
 
 from __future__ import annotations
 
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -61,3 +78,47 @@ def release(df: DataFrame, durable: bool = False) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
+
+
+class Scope:
+    """The caches and pins one operator call holds; see the module
+    docstring. Handles are tracked by identity: `release` and `keep`
+    of a handle the scope does not hold do nothing."""
+
+    def __init__(self, durable: bool = False) -> None:
+        self.durable = durable
+        # id -> (handle, its free); holding the handle keeps its id
+        # from being reused while it is in the map
+        self._held: dict[int, tuple[DataFrame, Callable[[], None]]] = {}
+
+    def __enter__(self) -> Scope:
+        return self
+
+    def __exit__(self, *exc: object) -> None:
+        self.release(*[df for df, _ in self._held.values()])
+
+    def _hold(self, df: DataFrame, free: Callable[[], None]) -> DataFrame:
+        self._held[id(df)] = (df, free)
+        return df
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Cache a relation the operator reads more than once."""
+        df = df.cache()
+        return self._hold(df, df.unpersist)
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        """Pin one generation (module `pin`, in this scope's mode)."""
+        df = pin(df, self.durable)
+        return self._hold(df, lambda: release(df, self.durable))
+
+    def release(self, *dfs: DataFrame) -> None:
+        """Free these handles now."""
+        for df in dfs:
+            held = self._held.pop(id(df), None)
+            if held is not None:
+                held[1]()
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Hand `df` to the caller: leaving the scope will not free it."""
+        self._held.pop(id(df), None)
+        return df

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
+from . import ckpt
 
 
 def normalized_text(col: str = "text") -> F.Column:
@@ -935,10 +936,6 @@ def embedding_neardup_pairs(
     )
 
 
-# The local/durable pin+release seam lives in operators/ckpt.py; the
-# iterative operators below take durable= and thread it through.
-
-
 def connected_components(
     edges: DataFrame, max_iter: int = 20, durable: bool = False
 ) -> DataFrame:
@@ -955,17 +952,20 @@ def connected_components(
     form long pipelines should use; the default stays the cheap
     local pin (the documented trade).
     """
-    from .ckpt import pin, release
     fwd = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # Cache the symmetrized edge list: it is duplicated-pairs-sized
-    # (tiny next to the corpus) but its LINEAGE is the full
-    # set-similarity join — without the cache every propagation
-    # iteration re-executes that join (measured: l02e paid the
-    # Jaccard plan once per round). Unpersisted before returning.
-    sym = fwd.union(
-        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).cache()
-    try:
+    with ckpt.Scope(durable) as s:
+        # Cache the symmetrized edge list: it is duplicated-pairs-sized
+        # (tiny next to the corpus) but its LINEAGE is the full
+        # set-similarity join — without the cache every propagation
+        # iteration re-executes that join (measured: l02e paid the
+        # Jaccard plan once per round).
+        sym = s.cache(
+            fwd.union(
+                edges.select(
+                    F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
+                )
+            )
+        )
         # Per-round labels use localCheckpoint, NOT cache: each round's
         # plan references the previous labels twice (propagate + union),
         # so a cache-only loop doubles the analyzed logical plan every
@@ -976,25 +976,22 @@ def connected_components(
         # one (checkpointed partitions are not recomputable on executor
         # loss — same documented trade as pagerank's result pin), paid
         # on a |V|-sized relation for diameter-many rounds.
-        labels = (
+        labels = s.pin(
             sym.groupBy(F.col("src").alias("doc_id"))
             .agg(F.min("dst").alias("component"))
             .select(
                 "doc_id", F.least("component", "doc_id").alias("component")
             )
         )
-        labels = pin(labels, durable)
-        converged = False
         for _ in range(max_iter):
             # propagate: my new label = min(my label, neighbors' labels)
-            prop = (
+            prop = s.pin(
                 sym.join(labels, sym.src == labels.doc_id)
                 .select(F.col("dst").alias("doc_id"), "component")
                 .union(labels)
                 .groupBy("doc_id")
                 .agg(F.min("component").alias("component"))
             )
-            prop = pin(prop, durable)
             converged = (
                 prop.join(
                     labels.withColumnRenamed("component", "_old"), "doc_id"
@@ -1005,23 +1002,18 @@ def connected_components(
             # The old generation's pinned blocks are dead once the
             # convergence probe has read them — free them now (the
             # loop would otherwise accumulate diameter × |V| blocks).
-            release(labels, durable)
+            s.release(labels)
             labels = prop
             if converged:
-                break
-        if not converged:
-            # Partial propagation is WRONG labels, not slow labels — a
-            # component wider than max_iter hops would silently split.
-            release(labels, durable)
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "iterations; raise max_iter (graph diameter exceeds it), "
-                "or use connected_components_star (O(log n) rounds, "
-                "diameter-independent) for long-chain graphs"
-            )
-        return labels
-    finally:
-        sym.unpersist()
+                return s.keep(labels)
+        # Partial propagation is WRONG labels, not slow labels — a
+        # component wider than max_iter hops would silently split.
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            "iterations; raise max_iter (graph diameter exceeds it), "
+            "or use connected_components_star (O(log n) rounds, "
+            "diameter-independent) for long-chain graphs"
+        )
 
 
 def connected_components_star(
@@ -1052,7 +1044,6 @@ def connected_components_star(
     durable=True uses reliable checkpoints per round instead of
     local pins (operators/ckpt.py).
     """
-    from .ckpt import pin, release
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         # m(u) = min over {u} ∪ neighbors(u); emitted edges connect
@@ -1089,63 +1080,57 @@ def connected_components_star(
     raw = edges.select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
-    cur = pin(
-        raw.filter(F.col("a") != F.col("b")).distinct(), durable
-    )
-    # Node set from the RAW edges, BEFORE the self-loop filter: a node
-    # whose only edge is a self-pair is still its own singleton
-    # component in connected_components' output, and the "Same
-    # contract" promise above includes it (self-review r5 — deriving
-    # nodes from `cur` silently dropped such nodes).
-    nodes = pin(
-        raw.select(F.col("a").alias("doc_id"))
-        .union(raw.select(F.col("b").alias("doc_id")))
-        .distinct(),
-        durable,
-    )
-    for _ in range(max_iter):
-        sym = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    with ckpt.Scope(durable) as s:
+        cur = s.pin(raw.filter(F.col("a") != F.col("b")).distinct())
+        # Node set from the RAW edges, BEFORE the self-loop filter: a
+        # node whose only edge is a self-pair is still its own
+        # singleton component in connected_components' output, and
+        # the "Same contract" promise above includes it (self-review
+        # r5 — deriving nodes from `cur` silently dropped such nodes).
+        nodes = s.pin(
+            raw.select(F.col("a").alias("doc_id"))
+            .union(raw.select(F.col("b").alias("doc_id")))
+            .distinct()
         )
-        after_large = star(sym, large=True)
-        sym2 = after_large.select(
-            F.col("a").alias("u"), F.col("b").alias("v")
-        ).union(
-            after_large.select(
-                F.col("b").alias("u"), F.col("a").alias("v")
+        for _ in range(max_iter):
+            sym = cur.select(
+                F.col("a").alias("u"), F.col("b").alias("v")
+            ).union(cur.select(F.col("b").alias("u"), F.col("a").alias("v")))
+            after_large = star(sym, large=True)
+            sym2 = after_large.select(
+                F.col("a").alias("u"), F.col("b").alias("v")
+            ).union(
+                after_large.select(
+                    F.col("b").alias("u"), F.col("a").alias("v")
+                )
             )
-        )
-        nxt = pin(star(sym2, large=False), durable)
-        # Fixpoint: the edge SET is unchanged (order-insensitive).
-        changed = not (
-            nxt.exceptAll(cur).isEmpty() and cur.exceptAll(nxt).isEmpty()
-        )
-        # Previous generation is dead after the fixpoint probe — free
-        # its pinned blocks (O(log n) rounds would otherwise stack
-        # that many |E|-sized block sets).
-        release(cur, durable)
-        cur = nxt
-        if not changed:
-            # At the fixpoint every edge is (node → component min):
-            # the labels are the edge list itself, plus a self-label
-            # for each component-min node (they carry no out-edge).
-            labels = cur.select(
-                F.col("a").alias("doc_id"), F.col("b").alias("component")
+            nxt = s.pin(star(sym2, large=False))
+            # Fixpoint: the edge SET is unchanged (order-insensitive).
+            changed = not (
+                nxt.exceptAll(cur).isEmpty() and cur.exceptAll(nxt).isEmpty()
             )
-            roots = nodes.join(
-                labels.select("doc_id"), "doc_id", "left_anti"
-            ).select("doc_id", F.col("doc_id").alias("component"))
-            out = pin(labels.union(roots), durable)
-            release(cur, durable)
-            release(nodes, durable)
-            return out
-    release(cur, durable)
-    release(nodes, durable)
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} "
-        "rounds; this bounds components of ~2^(max_iter/2) nodes — "
-        "raise max_iter"
-    )
+            # Previous generation is dead after the fixpoint probe —
+            # free its pinned blocks (O(log n) rounds would otherwise
+            # stack that many |E|-sized block sets).
+            s.release(cur)
+            cur = nxt
+            if not changed:
+                # At the fixpoint every edge is (node → component
+                # min): the labels are the edge list itself, plus a
+                # self-label for each component-min node (they carry
+                # no out-edge).
+                labels = cur.select(
+                    F.col("a").alias("doc_id"), F.col("b").alias("component")
+                )
+                roots = nodes.join(
+                    labels.select("doc_id"), "doc_id", "left_anti"
+                ).select("doc_id", F.col("doc_id").alias("component"))
+                return s.keep(s.pin(labels.union(roots)))
+        raise RuntimeError(
+            f"connected_components_star did not converge in {max_iter} "
+            "rounds; this bounds components of ~2^(max_iter/2) nodes — "
+            "raise max_iter"
+        )
 
 
 def decontaminate(

@@ -21,17 +21,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round4
+from . import ckpt
 
 
 def _contribs_nodes(
-    edges: DataFrame, src: str, dst: str
+    s: ckpt.Scope, edges: DataFrame, src: str, dst: str
 ) -> tuple[DataFrame, DataFrame]:
     """Shared directed-PageRank prelude: the CACHED (edge, out-degree)
     relation pre-hashed on the rank-join key, and the CACHED node set
     derived from it. One definition for pagerank and
     personalized_pagerank (they previously carried verbatim copies —
-    code-review r8) so prelude fixes cannot diverge. Callers own
-    unpersisting both returns.
+    code-review r8) so prelude fixes cannot diverge. Both caches are
+    held by the caller's scope `s`.
 
     NULL-endpoint edges are dropped up front: a NULL id is not a
     node, but it survives every equi-join asymmetrically — it would
@@ -68,18 +69,15 @@ def _contribs_nodes(
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst")
     ).filter(F.col("_src").isNotNull() & F.col("_dst").isNotNull())
-    contribs = (
-        e.repartition("_src")
-        .withColumn(
+    contribs = s.cache(
+        e.repartition("_src").withColumn(
             "_deg", F.count(F.lit(1)).over(Window.partitionBy("_src"))
         )
-        .cache()
     )
-    nodes = (
+    nodes = s.cache(
         contribs.select(F.col("_src").alias("id"))
         .union(contribs.select(F.col("_dst").alias("id")))
         .distinct()
-        .cache()
     )
     return contribs, nodes
 
@@ -90,7 +88,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    _materialize: bool = True,
     durable: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
@@ -116,21 +113,23 @@ def pagerank(
     rationale as dedup.connected_components' edge cache). The loop
     builds ONE composite plan — ranks are never cached or collected,
     so the full recurrence stays a single lazy DAG over the cached
-    edges. The cache is released before returning; callers get a
-    result whose lineage re-reads only the (small) cached-unpersisted
-    edge relation if recomputed.
+    edges, and the caches are released once the result is pinned.
+
+    The (|V|-row) result is pinned to executor storage and
+    unrecoverable on executor loss (the trade of
+    mining.apriori_frequent_itemsets' localCheckpoint) — callers
+    needing lineage durability should write the result to a sink, or
+    pass durable=True for a reliable checkpoint (operators/ckpt.py).
     """
-    contribs, nodes = _contribs_nodes(edges, src, dst)
-    try:
+    with ckpt.Scope(durable) as s:
+        contribs, nodes = _contribs_nodes(s, edges, src, dst)
         # Scalar sizing action (documented eager step, like the
         # guard probes elsewhere): N parameterizes the teleport term.
         n = nodes.count()
         if n == 0:
-            # Same materialize contract as the main path (the empty
-            # relation still pins, cheaply, so no caller ever holds a
-            # lineage into the unpersisted caches).
-            out = nodes.select("id", F.lit(0.0).alias("pagerank"))
-            return out.localCheckpoint(eager=True) if _materialize else out
+            return s.keep(
+                s.pin(nodes.select("id", F.lit(0.0).alias("pagerank")))
+            )
         teleport = (1.0 - damping) / n
         # The teleport floor for no-inbound nodes is folded INTO the
         # inflow aggregate: union one zero-contribution row per node
@@ -162,28 +161,8 @@ def pagerank(
         out = ranks.select(
             "id", F.round(F.col("_rank") * n, 4).alias("pagerank")
         )
-        if not _materialize:
-            # Test seam: return the LAZY composite plan with the
-            # caches still alive so plan audits can see the per-
-            # iteration InMemoryTableScans. The caller owns cache
-            # cleanup (spark.catalog.clearCache()).
-            return out
-        # Materialize before dropping the caches the plan leans on.
-        # Same trade as mining.apriori_frequent_itemsets' documented
-        # localCheckpoint: the (|V|-row) result is pinned to executor
-        # storage and unrecoverable on executor loss — callers
-        # needing lineage durability should write the result to a
-        # sink instead of holding this handle long-term.
-        # durable=True pins the result with a reliable checkpoint
-        # instead (operators/ckpt.py) — recoverable on executor loss.
-        from .ckpt import pin
-
-        out = pin(out, durable)
-        return out
-    finally:
-        if _materialize:
-            contribs.unpersist()
-            nodes.unpersist()
+        # Pinned while the caches it reads are still alive.
+        return s.keep(s.pin(out))
 
 
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -353,27 +332,16 @@ def kcore(
     lineage for the same measured reason as the CC loops: a
     cache-only loop re-analyzes a plan that doubles every round;
     durable=True swaps it for the reliable-checkpoint form
-    (operators/ckpt.py).
-
-    Optimization r11 (guide §1.2 — don't compute things twice): the
-    degree relation is pinned BEFORE the convergence count, so each
-    round runs the |E|-stub degree aggregate exactly once — the
-    previous formulation counted the lazy keep relation and then
-    re-derived the same aggregate inside the next-generation pin (and
-    a third time at the fixpoint for the result projection). The
-    survivor count and both semi-join build sides now read the pinned
-    (v, deg) rows; per-round cost drops by one full degree aggregate
-    at identical results (the CC loop's pin-before-probe pattern).
+    (operators/ckpt.py). The degree relation is pinned BEFORE the
+    convergence count, so each round runs the |E|-stub degree
+    aggregate once: the survivor count, both semi-join build sides
+    and the fixpoint result all read the pinned (v, deg) rows.
     """
-    from .ckpt import pin, release
-
-    e = pin(_undirected(edges, src, dst), durable)
-    live: list[DataFrame] = [e]
-    prev_nodes: int | None = None
-    try:
+    with ckpt.Scope(durable) as s:
+        e = s.pin(_undirected(edges, src, dst))
+        prev_nodes: int | None = None
         for _ in range(max_iter):
-            dgs = pin(_degrees(e), durable)
-            live.append(dgs)
+            dgs = s.pin(_degrees(e))
             keep = dgs.filter(F.col("deg") >= k).select("v")
             n = keep.count()
             if n == 0:
@@ -385,7 +353,7 @@ def kcore(
                 from pyspark.sql import types as ST
 
                 id_type = e.schema["s"].dataType
-                empty = e.sparkSession.createDataFrame(
+                return e.sparkSession.createDataFrame(
                     [],
                     ST.StructType(
                         [
@@ -394,43 +362,33 @@ def kcore(
                         ]
                     ),
                 )
-                return empty
             if n == prev_nodes:
                 # No node fell below k this round — fixpoint reached
                 # (count equality forces keep == last round's keep ⊇
                 # nodes(e) ⊇ keep, so every node of e has deg >= k and
                 # the unfiltered projection below IS the core). Pin
-                # the (core-sized) result, then release the pins it
-                # derives from: returning the lazy plan left blocks
-                # pinned for the session after the caller dropped the
-                # handle (code-review r8; the khop/sssp final-pin
-                # stance).
-                out = pin(
-                    dgs.select(
-                        F.col("v").alias("id"),
-                        F.col("deg").alias("core_degree"),
-                    ),
-                    durable,
+                # the (core-sized) result: the pins it derives from
+                # are released on leaving the scope.
+                return s.keep(
+                    s.pin(
+                        dgs.select(
+                            F.col("v").alias("id"),
+                            F.col("deg").alias("core_degree"),
+                        )
+                    )
                 )
-                return out
             prev_nodes = n
-            nxt = (
+            nxt = s.pin(
                 e.join(keep.withColumnRenamed("v", "s"), "s", "semi")
                 .join(keep.withColumnRenamed("v", "d"), "d", "semi")
                 .select("s", "d")
             )
-            nxt = pin(nxt, durable)
-            for df in live:
-                release(df, durable)
-            live = [nxt]
+            s.release(e, dgs)
             e = nxt
         raise RuntimeError(
             f"kcore(k={k}) did not stabilize in {max_iter} rounds; "
             "raise max_iter (peel depth exceeds it)"
         )
-    finally:
-        for df in live:
-            release(df, durable)
 
 
 def khop_distances(
@@ -475,53 +433,39 @@ def khop_distances(
     blocks; durable=True swaps every pin for a reliable checkpoint
     (recoverable on executor loss, see operators/ckpt.py).
     """
-    from .ckpt import pin, release
-
     # NULL endpoints dropped up front (the sssp review-r5 stance): a
     # NULL dst never equi-matches the visited anti-join, so it would
     # be re-"discovered" at EVERY hop and emit one (NULL, dist) row
     # per distance — violating the one-min-distance-per-id contract
     # (code-review r8). NULL seed ids are likewise not nodes.
-    e = (
-        edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-        .filter(F.col("_src").isNotNull() & F.col("_dst").isNotNull())
-        .repartition("_src")
-        .cache()
-    )
-    legs: list[DataFrame] = []
-    try:
-        frontier = pin(
+    with ckpt.Scope(durable) as s:
+        e = s.cache(
+            edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
+            .filter(F.col("_src").isNotNull() & F.col("_dst").isNotNull())
+            .repartition("_src")
+        )
+        frontier = s.pin(
             sources.select(F.col(id_col).alias("id"))
             .filter(F.col("id").isNotNull())
-            .distinct(),
-            durable,
+            .distinct()
         )
-        legs.append(frontier)
         out_legs = [frontier.select("id", F.lit(0).alias("dist"))]
         visited = frontier
         for h in range(1, max_hops + 1):
             if frontier.isEmpty():
                 break
-            frontier = pin(
-                e.join(
-                    frontier.withColumnRenamed("id", "_src"), "_src"
-                )
+            frontier = s.pin(
+                e.join(frontier.withColumnRenamed("id", "_src"), "_src")
                 .select(F.col("_dst").alias("id"))
                 .distinct()
-                .join(visited, "id", "anti"),
-                durable,
+                .join(visited, "id", "anti")
             )
-            legs.append(frontier)
             out_legs.append(frontier.select("id", F.lit(h).alias("dist")))
             visited = visited.unionByName(frontier)
         out = out_legs[0]
         for leg in out_legs[1:]:
             out = out.unionByName(leg)
-        return pin(out, durable)
-    finally:
-        e.unpersist()
-        for leg in legs:
-            release(leg, durable)
+        return s.keep(s.pin(out))
 
 
 def sssp_distances(
@@ -565,36 +509,29 @@ def sssp_distances(
     (no O(rounds²) lineage re-derivation). Per-round driver traffic
     is one isEmpty probe.
     """
-    from .ckpt import pin, release
-
-    e = (
-        edges.select(
-            F.col(src).alias("_src"),
-            F.col(dst).alias("_dst"),
-            F.col(weight).cast("double").alias("_w"),
+    with ckpt.Scope(durable) as s:
+        e = s.cache(
+            edges.select(
+                F.col(src).alias("_src"),
+                F.col(dst).alias("_dst"),
+                F.col(weight).cast("double").alias("_w"),
+            )
+            .filter(
+                F.col("_w").isNotNull()
+                & F.col("_src").isNotNull()
+                & F.col("_dst").isNotNull()
+            )
+            .repartition("_src")
         )
-        .filter(
-            F.col("_w").isNotNull()
-            & F.col("_src").isNotNull()
-            & F.col("_dst").isNotNull()
-        )
-        .repartition("_src")
-        .cache()
-    )
-    legs: list[DataFrame] = []
-    out: DataFrame | None = None
-    try:
-        dist = pin(
+        dist = s.pin(
             # a NULL id is not a node (the khop_distances stance —
             # r10 sweep): without the filter a NULL seed emits a
             # spurious (NULL, 0.0) output row
             sources.select(F.col(id_col).alias("id"))
             .filter(F.col("id").isNotNull())
             .distinct()
-            .select("id", F.lit(0.0).alias("dist")),
-            durable,
+            .select("id", F.lit(0.0).alias("dist"))
         )
-        legs.append(dist)
         frontier = dist
         for _ in range(max_rounds):
             if frontier.isEmpty():
@@ -608,38 +545,28 @@ def sssp_distances(
                 .groupBy("id")
                 .agg(F.min("_nd").alias("_nd"))
             )
-            improved = pin(
+            improved = s.pin(
                 cand.join(dist.withColumnRenamed("dist", "_cur"), "id", "left")
                 .filter(
                     F.col("_cur").isNull() | (F.col("_nd") < F.col("_cur"))
                 )
-                .select("id", F.col("_nd").alias("dist")),
-                durable,
+                .select("id", F.col("_nd").alias("dist"))
             )
-            legs.append(improved)
-            dist = pin(
-                dist.join(improved, "id", "anti").unionByName(improved),
-                durable,
+            nxt = s.pin(
+                dist.join(improved, "id", "anti").unionByName(improved)
             )
-            legs.append(dist)
-            frontier = improved
+            # The superseded dist and frontier have no reader left.
+            s.release(dist, frontier)
+            dist, frontier = nxt, improved
         if require_converged and not frontier.isEmpty():
             raise RuntimeError(
                 f"sssp_distances: still improving after {max_rounds} "
                 "rounds — raise max_rounds (or a negative cycle exists); "
                 "refusing to return a truncated relation as the fixpoint"
             )
-        # dist is already a pinned generation (every loop update pins
-        # it) — return it directly instead of re-materializing the
-        # same rows into a second pin (optimization r11, guide §1.2);
-        # the finally below releases every OTHER leg.
-        out = dist
-        return out
-    finally:
-        e.unpersist()
-        for leg in legs:
-            if leg is not out:
-                release(leg, durable)
+        # dist is already a pinned generation — returned as is, not
+        # re-materialized into a second pin.
+        return s.keep(dist)
 
 
 def degree_assortativity(
@@ -750,31 +677,19 @@ def ktruss(
     Rounds are bounded by the peel depth; the max_iter guard RAISES
     rather than returning a too-large pseudo-truss (the kcore/CC
     stance), and per-round lineage pinning + release follow kcore
-    exactly (durable=True for the reliable-checkpoint form).
-
-    Optimization r11 (guide §1.2 — don't compute things twice): the
+    exactly (durable=True for the reliable-checkpoint form). The
     filtered (s, d, support) relation is pinned BEFORE the
     convergence count, so each round runs the triangle enumeration —
-    the round's dominant cost — exactly once. The previous
-    formulation counted the lazy keep relation and then re-ran the
-    whole enumeration+support subtree inside the next-generation pin
-    (and again at the fixpoint for the result pin): two full
-    triangle passes per round for one round's peel. The count, the
-    fixpoint return, and the next round's edge view now all read the
-    one pinned materialization; results identical.
+    the round's dominant cost — once: the count, the fixpoint return
+    and the next round's edge view all read that one pin.
     """
-    from .ckpt import pin, release
-
     need = k - 2
-    e_pin = pin(_undirected(edges, src, dst), durable)
-    e = e_pin
-    live: list[DataFrame] = [e_pin]
-    prev: int | None = None
-    out: DataFrame | None = None
-    try:
+    with ckpt.Scope(durable) as s:
+        held = e = s.pin(_undirected(edges, src, dst))
+        prev: int | None = None
         for _ in range(max_iter):
             sup = _edge_support(e)
-            keep = pin(
+            keep = s.pin(
                 e.join(sup, ["s", "d"], "left")
                 .select(
                     "s",
@@ -783,16 +698,14 @@ def ktruss(
                         "support"
                     ),
                 )
-                .filter(F.col("support") >= need),
-                durable,
+                .filter(F.col("support") >= need)
             )
-            live.append(keep)
             n = keep.count()
             if n == 0:
                 from pyspark.sql import types as ST
 
                 id_type = e.schema["s"].dataType
-                empty = e.sparkSession.createDataFrame(
+                return e.sparkSession.createDataFrame(
                     [],
                     ST.StructType(
                         [
@@ -802,33 +715,22 @@ def ktruss(
                         ]
                     ),
                 )
-                return empty
             if n == prev:
                 # no edge fell below k−2 this round — fixpoint; the
                 # support column was computed against this same edge
-                # set, so it is the within-truss support. keep is
-                # already the pinned result — return it and release
-                # every OTHER pin (code-review r8 — the kcore/khop
-                # final-pin stance).
-                out = keep
-                return out
+                # set, so it is the within-truss support, and keep is
+                # already the pinned result.
+                return s.keep(keep)
             prev = n
             # Next round reads the (s, d) view of the pinned keep —
             # a lazy projection over the LogicalRDD, no second
             # materialization and bounded plan depth.
-            for df in live:
-                if df is not keep:
-                    release(df, durable)
-            live = [keep]
-            e = keep.select("s", "d")
+            s.release(held)
+            held, e = keep, keep.select("s", "d")
         raise RuntimeError(
             f"ktruss(k={k}) did not stabilize in {max_iter} rounds; "
             "raise max_iter (peel depth exceeds it)"
         )
-    finally:
-        for df in live:
-            if df is not out:
-                release(df, durable)
 
 
 def personalized_pagerank(
@@ -839,7 +741,6 @@ def personalized_pagerank(
     src: str = "src",
     dst: str = "dst",
     seed_col: str = "id",
-    _materialize: bool = True,
     durable: bool = False,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass returns to a SEED set
@@ -878,19 +779,17 @@ def personalized_pagerank(
             f"personalized_pagerank: damping must be in (0, 1), "
             f"got {damping}"
         )
-    contribs, nodes = _contribs_nodes(edges, src, dst)
-    seeds_in = (
-        seeds.select(F.col(seed_col).alias("id"))
-        .distinct()
-        .join(nodes, "id", "semi")
-        .cache()
-    )
-    try:
+    with ckpt.Scope(durable) as s:
+        contribs, nodes = _contribs_nodes(s, edges, src, dst)
+        seeds_in = s.cache(
+            seeds.select(F.col(seed_col).alias("id"))
+            .distinct()
+            .join(nodes, "id", "semi")
+        )
         n = nodes.count()
         m = seeds_in.count()
         if n == 0:
-            out = nodes.select("id", F.lit(0.0).alias("ppr"))
-            return out.localCheckpoint(eager=True) if _materialize else out
+            return s.keep(s.pin(nodes.select("id", F.lit(0.0).alias("ppr"))))
         if m == 0:
             raise ValueError(
                 "personalized_pagerank: no seed is a graph node — "
@@ -904,14 +803,12 @@ def personalized_pagerank(
             F.col("_is").isNotNull(),
             F.lit((1.0 - damping) / (damping * m)),
         ).otherwise(F.lit(0.0))
-        tele = (
+        tele = s.cache(
             nodes.join(
                 F.broadcast(seeds_in.withColumn("_is", F.lit(1))),
                 "id",
                 "left",
-            )
-            .select("id", tele_c.alias("_c"))
-            .cache()
+            ).select("id", tele_c.alias("_c"))
         )
         ranks = tele.select(
             "id",
@@ -937,21 +834,7 @@ def personalized_pagerank(
         out = ranks.select(
             "id", F.round(F.col("_rank") * n, 4).alias("ppr")
         )
-        if not _materialize:
-            return out
-        from .ckpt import pin
-
-        out = pin(out, durable)
-        return out
-    finally:
-        if _materialize:
-            contribs.unpersist()
-            nodes.unpersist()
-            seeds_in.unpersist()
-            try:
-                tele.unpersist()
-            except UnboundLocalError:
-                pass
+        return s.keep(s.pin(out))
 
 
 def label_propagation(
@@ -959,7 +842,6 @@ def label_propagation(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    _materialize: bool = True,
 ) -> DataFrame:
     """Synchronous label-propagation communities over an UNDIRECTED
     graph — (id, community) after `iterations` rounds of
@@ -994,27 +876,14 @@ def label_propagation(
     nodes) and self-loops are dropped by normalization.
     """
     und = _undirected(edges, src, dst)
-    stubs = (
-        und.select(F.col("s").alias("_u"), F.col("d").alias("_v"))
-        .unionAll(und.select(F.col("d").alias("_u"), F.col("s").alias("_v")))
-        .repartition("_u")
-    )
-    if _materialize:
-        # Cache pays only when the loop EVALUATES per round (the
-        # localCheckpoint below); the lazy path returns an unevaluated
-        # plan, where a cache would pin for the session lifetime
-        # without ever being warmed by this function (ADVICE r7 leak).
-        stubs = stubs.cache()
-    # Per-round generations pin eagerly (lineage truncation) and
-    # the PREDECESSOR is released once its successor is
-    # materialized — the same ckpt.pin/ckpt.release seam as
-    # bpe_merge_rounds/apriori (ADVICE r9: without the release,
-    # each round leaked a |V|-row block set for the session).
-    # Only the FINAL generation stays pinned: it is the RDD the
-    # returned plan reads. (prev initialized OUTSIDE the try so the
-    # error-path release below can never NameError.)
-    prev = None
-    try:
+    with ckpt.Scope() as s:
+        stubs = s.cache(
+            und.select(F.col("s").alias("_u"), F.col("d").alias("_v"))
+            .unionAll(
+                und.select(F.col("d").alias("_u"), F.col("s").alias("_v"))
+            )
+            .repartition("_u")
+        )
         labels = stubs.select(F.col("_v").alias("id")).distinct().select(
             "id", F.col("id").alias("_lab")
         )
@@ -1045,7 +914,7 @@ def label_propagation(
             # map-side combine is worthless in round 1, where every
             # (node, neighbor-label) pair is unique by construction
             # (labels start as node ids).
-            labels = (
+            prev, labels = labels, s.pin(
                 stubs.join(labels, stubs["_u"] == labels["id"])
                 .select(F.col("_v").alias("id"), "_lab")
                 .repartition("id")
@@ -1058,24 +927,8 @@ def label_propagation(
                     ).alias("_lab")
                 )
             )
-            if _materialize:
-                from .ckpt import pin, release
-
-                labels = pin(labels)
-                if prev is not None:
-                    release(prev)
-                prev = labels
-        return labels.select("id", F.col("_lab").alias("community"))
-    except BaseException:
-        # error-path release (r10 review, the kcore/CC stance): a
-        # mid-loop failure must not leave the last pinned generation
-        # resident for the session — nothing will ever read it
-        if _materialize and prev is not None:
-            from .ckpt import release
-
-            release(prev)
-        raise
-    finally:
-        if _materialize:
-            # checkpointed labels no longer reference the stubs cache
-            stubs.unpersist()
+            # Only the final generation stays pinned: it is the RDD
+            # the returned plan reads (ADVICE r9: without the release,
+            # each round leaked a |V|-row block set for the session).
+            s.release(prev)
+        return s.keep(labels).select("id", F.col("_lab").alias("community"))

@@ -25,6 +25,8 @@ from pyspark.ml.fpm import FPGrowth, FPGrowthModel, PrefixSpan
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import ckpt
+
 
 # ---------------------------------------------------------------------------
 # M2/M3: pass-1 counting + min-support filter (PFP job 1 == word count)
@@ -233,12 +235,8 @@ def apriori_frequent_itemsets(
     reliable `checkpoint()` against the context's checkpoint dir
     (operators/ckpt.py), at the cost of one durable write per level.
     """
-    from .ckpt import pin, release
-
-    cached: list[DataFrame] = []
-    try:
-        baskets = baskets.select(F.col(items_col).alias("items")).cache()
-        cached.append(baskets)
+    with ckpt.Scope(durable) as s:
+        baskets = s.cache(baskets.select(F.col(items_col).alias("items")))
         n = baskets.count()
         threshold = int(-(-min_support * n // 1))  # ceil
 
@@ -254,7 +252,8 @@ def apriori_frequent_itemsets(
             .agg(F.count(F.lit(1)).alias("freq"))
             .filter(F.col("freq") >= threshold)
         )
-        lk = pin(lk, durable)
+        # The level pins outlive the scope: the returned plan reads them.
+        lk = ckpt.pin(lk, durable)
         results = [lk.select(F.array("i0").alias("items"), "freq")]
         frequent_singletons = lk.select("i0")
 
@@ -262,17 +261,13 @@ def apriori_frequent_itemsets(
         # projection — same trick FP-Growth uses) so later subset
         # tests shrink.
         with_id = baskets.withColumn("_bid", F.monotonically_increasing_id())
-        pruned = (
+        pruned = s.cache(
             with_id.select("_bid", F.explode("items").alias("i0"))
             .join(F.broadcast(frequent_singletons), "i0")
             .groupBy("_bid")
             .agg(F.sort_array(F.collect_set("i0")).alias("items"))
-            .cache()
         )
-        cached.append(pruned)
-
-        bi = pruned.select("_bid", F.explode("items").alias("i0")).cache()
-        cached.append(bi)
+        bi = s.cache(pruned.select("_bid", F.explode("items").alias("i0")))
 
         prev = lk.select(F.array("i0").alias("itemset"))
         for k in range(2, max_k + 1):
@@ -319,11 +314,8 @@ def apriori_frequent_itemsets(
             # BIGINT) and mapping ids back to arrays afterwards via a
             # candidate-sized broadcast. The id assignment is pinned by
             # the eager checkpoint, so both readers see one assignment.
-            cands_id = pin(
-                cands.withColumn(
-                    "_cid", F.monotonically_increasing_id()
-                ),
-                durable,
+            cands_id = s.pin(
+                cands.withColumn("_cid", F.monotonically_increasing_id())
             )
             cand_members = cands_id.select(
                 "_cid", F.explode("itemset").alias("i0")
@@ -339,15 +331,15 @@ def apriori_frequent_itemsets(
                 .join(F.broadcast(cands_id), "_cid")
                 .select("itemset", "freq")
             )
-            counted = pin(counted, durable)
+            counted = ckpt.pin(counted, durable)
             # cands_id (the pre-prune candidate relation, the largest
             # per-k pin) has no consumer once `counted` is pinned —
             # release its blocks NOW instead of leaking O(levels)
-            # executor storage for the session (code-review r9; the
-            # exact hazard ckpt.release documents). The counted pins
-            # stay: the returned plan reads them.
-            release(cands_id, durable)
+            # executor storage for the session (code-review r9).
+            s.release(cands_id)
             if counted.isEmpty():
+                # an empty level joins no result: nothing reads its pin
+                ckpt.release(counted, durable)
                 break
             results.append(
                 counted.select(F.col("itemset").alias("items"), "freq")
@@ -358,9 +350,6 @@ def apriori_frequent_itemsets(
         for r in results[1:]:
             out = out.unionByName(r)
         return out.orderBy(F.desc("freq"), F.col("items"))
-    finally:
-        for c in cached:
-            c.unpersist()
 
 
 # ---------------------------------------------------------------------------

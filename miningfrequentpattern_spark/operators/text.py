@@ -1002,96 +1002,94 @@ def bpe_merge_rounds(
         )
     spark = docs.sparkSession
 
-    # One corpus pass: whitespace words -> (word, freq), then each
-    # word becomes its character-symbol array. Everything after this
-    # line is vocabulary-sized.
-    vocab = ckpt.pin(
-        docs.select(
-            F.explode(tokens(text_col)).alias("_w")
-        )
-        .groupBy("_w")
-        .agg(F.count(F.lit(1)).alias("_freq"))
-        .select(
-            F.split("_w", "").alias("_syms"),
-            "_freq",
-        )
-    )
-
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rnd in range(1, n_merges + 1):
-        pairs = (
-            vocab.select(
-                F.posexplode(
-                    F.slice("_syms", 1, F.size("_syms") - 1)
-                ).alias("_i", "_l"),
-                F.col("_syms"),
-                F.col("_freq"),
+    # The merge table is collected round by round, so no vocab
+    # generation outlives the scope.
+    with ckpt.Scope() as s:
+        # One corpus pass: whitespace words -> (word, freq), then each
+        # word becomes its character-symbol array. Everything after
+        # this line is vocabulary-sized.
+        vocab = s.pin(
+            docs.select(
+                F.explode(tokens(text_col)).alias("_w")
             )
+            .groupBy("_w")
+            .agg(F.count(F.lit(1)).alias("_freq"))
             .select(
-                F.col("_l"),
-                F.element_at(
-                    "_syms", F.col("_i") + F.lit(2)
-                ).alias("_r"),
+                F.split("_w", "").alias("_syms"),
                 "_freq",
             )
-            .groupBy("_l", "_r")
-            .agg(F.sum("_freq").alias("_n"))
         )
-        # deterministic argmax: count DESC, then (left, right) ASC —
-        # ONE row to the driver (the bounded scalar-probe idiom).
-        # orderBy+limit(1) compiles to TakeOrdered (no full sort);
-        # m28's max_by trick doesn't apply here because the tiebreak
-        # is an ASCENDING string and strings have no max_by-orderable
-        # negation.
-        top = pairs.orderBy(
-            F.desc("_n"), F.asc("_l"), F.asc("_r")
-        ).limit(1).collect()
-        if not top:
-            break
-        l, r, n = top[0]["_l"], top[0]["_r"], int(top[0]["_n"])
-        if n < min_pair_count:
-            break
-        merged = l + r
-        merges.append((rnd, l, r, merged, n))
-        # Row-local rewrite: left-to-right fold merging every
-        # NON-OVERLAPPING (l, r) occurrence — the exact sequential
-        # semantics of the reference implementation ("aaa" with
-        # ("a","a") merges once, leaving "aa","a"). No just-merged
-        # flag is needed for the non-overlap contract (code-review
-        # r9 removed it): after a merge the accumulator's last
-        # element is l+r, which can only equal l if r were '' —
-        # impossible, since symbols come from splitting non-empty
-        # words and merges concatenate non-empty symbols — so the
-        # plain last-element check IS the non-overlapping fold
-        # (property-proven against the pure-Python reference and the
-        # replace-fold oracle, both of which encode the same
-        # contract).
-        lc, rc, mc = F.lit(l), F.lit(r), F.lit(merged)
-        folded = F.aggregate(
-            "_syms",
-            F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == lc)
-                & (x == rc),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(mc),
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-        # New generation pinned eagerly, PREVIOUS generation released
-        # NOW (the graph-loop ckpt seam): without the release a
-        # k-round training run pins O(k) vocabulary copies for the
-        # session (ADVICE-r8 class leak, fixed alongside
-        # growth_accounting's).
-        prev = vocab
-        vocab = ckpt.pin(vocab.select(folded.alias("_syms"), "_freq"))
-        ckpt.release(prev)
 
-    # The merge table was collected round-by-round; the final vocab
-    # generation has no consumer — release it too.
-    ckpt.release(vocab)
+        merges: list[tuple[int, str, str, str, int]] = []
+        for rnd in range(1, n_merges + 1):
+            pairs = (
+                vocab.select(
+                    F.posexplode(
+                        F.slice("_syms", 1, F.size("_syms") - 1)
+                    ).alias("_i", "_l"),
+                    F.col("_syms"),
+                    F.col("_freq"),
+                )
+                .select(
+                    F.col("_l"),
+                    F.element_at(
+                        "_syms", F.col("_i") + F.lit(2)
+                    ).alias("_r"),
+                    "_freq",
+                )
+                .groupBy("_l", "_r")
+                .agg(F.sum("_freq").alias("_n"))
+            )
+            # deterministic argmax: count DESC, then (left, right) ASC —
+            # ONE row to the driver (the bounded scalar-probe idiom).
+            # orderBy+limit(1) compiles to TakeOrdered (no full sort);
+            # m28's max_by trick doesn't apply here because the tiebreak
+            # is an ASCENDING string and strings have no max_by-orderable
+            # negation.
+            top = pairs.orderBy(
+                F.desc("_n"), F.asc("_l"), F.asc("_r")
+            ).limit(1).collect()
+            if not top:
+                break
+            l, r, n = top[0]["_l"], top[0]["_r"], int(top[0]["_n"])
+            if n < min_pair_count:
+                break
+            merged = l + r
+            merges.append((rnd, l, r, merged, n))
+            # Row-local rewrite: left-to-right fold merging every
+            # NON-OVERLAPPING (l, r) occurrence — the exact sequential
+            # semantics of the reference implementation ("aaa" with
+            # ("a","a") merges once, leaving "aa","a"). No just-merged
+            # flag is needed for the non-overlap contract (code-review
+            # r9 removed it): after a merge the accumulator's last
+            # element is l+r, which can only equal l if r were '' —
+            # impossible, since symbols come from splitting non-empty
+            # words and merges concatenate non-empty symbols — so the
+            # plain last-element check IS the non-overlapping fold
+            # (property-proven against the pure-Python reference and the
+            # replace-fold oracle, both of which encode the same
+            # contract).
+            lc, rc, mc = F.lit(l), F.lit(r), F.lit(merged)
+            folded = F.aggregate(
+                "_syms",
+                F.array().cast("array<string>"),
+                lambda acc, x: F.when(
+                    (F.size(acc) > 0)
+                    & (F.element_at(acc, -1) == lc)
+                    & (x == rc),
+                    F.concat(
+                        F.slice(acc, 1, F.size(acc) - 1),
+                        F.array(mc),
+                    ),
+                ).otherwise(F.concat(acc, F.array(x))),
+            )
+            # New generation pinned eagerly, PREVIOUS generation released
+            # NOW: without the release a k-round training run pins O(k)
+            # vocabulary copies for the session (ADVICE-r8 class leak).
+            prev = vocab
+            vocab = s.pin(vocab.select(folded.alias("_syms"), "_freq"))
+            s.release(prev)
+
     return spark.createDataFrame(
         merges,
         "round int, left string, right string, merged string, "

@@ -1892,8 +1892,9 @@ def m28_part_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     7.1->4.2 s at sf0.1, bit-identical labeling); lineage truncated
     per round (the r5 Catalyst exponential-plan fix). Why not fewer
     rounds: 2-round LPA diverges from 3-round on 73% of fixture
-    nodes (scripts/m28_ab.py) — the iteration count is semantics,
-    not tuning. operators/graph.py::label_propagation."""
+    nodes (the A/B harness scripts/m28_ab.py, in git history at
+    68d0a82) — the iteration count is semantics, not tuning.
+    operators/graph.py::label_propagation."""
     from ..operators.graph import label_propagation
 
     pairs = _copurchase_pairs(spark, sf_dir)

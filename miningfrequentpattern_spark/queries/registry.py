@@ -193,8 +193,9 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # the youngest backfill, l25_curation_pipeline -> round 10) because
 # its operator code changed this round — the label_propagation
 # single-exchange round-body shave (bit-identical labeling proven by
-# scripts/m28_ab.py parity, but the re-certify rule is mechanical:
-# changed code re-proves in the driver env).
+# the scripts/m28_ab.py parity run, in git history at 68d0a82, but
+# the re-certify rule is mechanical: changed code re-proves in the
+# driver env).
 #
 # ROUND 10 ROTATION (executed): CORRECTNESS_r09 came back 48/50 —
 # 47 hash-green + l44's by-design rows-only refresh — with ONE real

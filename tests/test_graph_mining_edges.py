@@ -1,6 +1,7 @@
 """Edge-input and lifecycle pins for the graph/mining/relational
 operators — round-8 batch-3 code-review regressions."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -69,6 +70,52 @@ def test_kcore_ktruss_fixpoint_release_edge_pins(spark):
         (1, 2), (1, 3), (2, 3)
     }
     assert _n_persistent(spark) <= before + 1
+
+
+@pytest.mark.parametrize(
+    "op, held",
+    [
+        ("khop_distances", 1),
+        ("sssp_distances", 1),
+        ("pagerank", 1),
+        ("personalized_pagerank", 1),
+        # the returned plan reads one pin per non-empty level (L1, L2)
+        ("apriori_frequent_itemsets", 2),
+    ],
+)
+def test_iterative_operators_release_all_but_result(spark, op, held):
+    """Every per-round pin and every cache is freed by the time the
+    operator returns; only the storage its result reads remains
+    (new persistent RDDs counted by id — an earlier test's may be
+    collected meanwhile)."""
+    from miningfrequentpattern_spark.operators import graph, mining
+
+    edges = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 3, 1.0), (1, 3, 1.0), (3, 4, 1.0)],
+        "src bigint, dst bigint, weight double",
+    )
+    seeds = spark.createDataFrame([(1,)], "id bigint")
+    baskets = spark.createDataFrame(
+        [(["a", "b", "c"],), (["a", "b"],), (["b", "c"],), (["a", "c"],)],
+        "items array<string>",
+    )
+    run = {
+        "khop_distances": lambda: graph.khop_distances(edges, seeds),
+        "sssp_distances": lambda: graph.sssp_distances(edges, seeds),
+        "pagerank": lambda: graph.pagerank(edges),
+        "personalized_pagerank": lambda: graph.personalized_pagerank(
+            edges, seeds
+        ),
+        # L3 {a, b, c} is in one basket: the last level is empty
+        "apriori_frequent_itemsets": lambda: mining.apriori_frequent_itemsets(
+            baskets, min_support=0.5
+        ),
+    }[op]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    out = run()
+    assert out.count() > 0
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= held
 
 
 def test_item_supports_counts_basket_frequency_not_occurrences(spark):

@@ -109,6 +109,6 @@ def test_label_propagation_releases_per_round_checkpoints(spark):
     base = n_persistent()
     out = label_propagation(edges, iterations=6)
     assert out.count() == 31
-    # final labels generation only (the stubs cache is unpersisted in
-    # the operator's finally block)
+    # final labels generation only (the stubs cache is freed when the
+    # operator's ckpt.Scope exits)
     assert n_persistent() <= base + 1, n_persistent()

@@ -1,8 +1,10 @@
 """LLM-pipeline invariants: the randomized/rows-only operators are
 checked against their exact counterparts here (SURVEY.md §2.4)."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from miningfrequentpattern_spark.operators import ckpt
 from miningfrequentpattern_spark.operators import text as T
 from miningfrequentpattern_spark.operators.dedup import (
     connected_components,
@@ -599,6 +601,70 @@ def test_cc_loops_release_per_round_checkpoints(spark):
     out2 = connected_components_star(chain)
     assert out2.count() == 25
     assert n_persistent() <= base2 + 1, n_persistent()
+
+
+def _persistent_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize(
+    "op", ["connected_components", "connected_components_star"]
+)
+def test_cc_loops_free_storage_when_probe_raises(spark, monkeypatch, op):
+    """A convergence probe that raises must not leave the loop's
+    caches or pinned generations behind: no persistent RDD is added.
+    (Compared by id: an earlier test's RDD may be collected
+    meanwhile.)"""
+    from miningfrequentpattern_spark.operators import dedup
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "doc_a long, doc_b long"
+    )
+    base = _persistent_ids(spark)
+
+    def boom(self):
+        raise RuntimeError("probe failed")
+
+    # the classic DataFrame subclass; patching pyspark.sql.DataFrame
+    # would not reach it
+    monkeypatch.setattr(type(chain), "isEmpty", boom)
+    with pytest.raises(RuntimeError, match="probe failed"):
+        getattr(dedup, op)(chain)
+    monkeypatch.undo()
+    assert _persistent_ids(spark) - base == set()
+
+
+def test_scope_frees_all_but_kept_on_exit_and_on_raise(spark):
+    """ckpt.Scope frees every cache and pin it still holds when the
+    block is left — returned or raised — except the kept handle; a
+    release of a handle it does not hold does nothing."""
+    df = spark.range(10)
+    base = _persistent_ids(spark)
+
+    def n_persistent():
+        return len(_persistent_ids(spark) - base)
+
+    with ckpt.Scope() as s:
+        c = s.cache(df.selectExpr("id * 2 AS x"))
+        c.count()
+        a, b = s.pin(df.filter("id > 2")), s.pin(df.filter("id > 5"))
+        assert n_persistent() == 3
+        s.release(a)
+        s.release(a, df)  # not held (any more): nothing happens
+        assert n_persistent() == 2
+        kept = s.keep(b)
+    assert n_persistent() == 1
+    assert kept.count() == 4
+    ckpt.release(kept)
+    assert n_persistent() == 0
+
+    with pytest.raises(ValueError):
+        with ckpt.Scope() as s:
+            s.pin(df)
+            s.cache(df.selectExpr("id + 1 AS y")).count()
+            assert n_persistent() == 2
+            raise ValueError
+    assert n_persistent() == 0
 
 
 def test_pq_recall_vs_exact(spark):

@@ -477,21 +477,32 @@ def test_compact_roundtrip_aggregates_partial_final(spark):
     assert p.count("HashAggregate") >= 2, p
 
 
-def test_pagerank_iterations_reuse_cached_edges(spark):
+def test_pagerank_iterations_reuse_cached_edges(spark, monkeypatch):
     """Every PageRank iteration must read the edge relation from the
     in-memory cache — InMemoryTableScan at least once per iteration —
-    and nothing may plan a cartesian. Audited through the operator's
-    lazy-plan seam: the registered m13 materializes via an eager
-    localCheckpoint (so its public plan is just the checkpoint scan),
-    which is itself asserted here."""
+    and nothing may plan a cartesian. Audited on the plan pagerank
+    hands to ckpt.pin, while its caches are still live: the registered
+    m13 returns that pin (so its public plan is just the checkpoint
+    scan), which is itself asserted here."""
+    from miningfrequentpattern_spark.operators import ckpt
     from miningfrequentpattern_spark.operators.graph import pagerank
 
+    plans = []
+    real_pin = ckpt.pin
+
+    def spy(df, durable=False):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_pin(df, durable)
+
+    monkeypatch.setattr(ckpt, "pin", spy)
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
     )
-    lazy = pagerank(edges, iterations=3, _materialize=False)
-    p = lazy._jdf.queryExecution().executedPlan().toString()
-    spark.catalog.clearCache()
+    out = pagerank(edges, iterations=3)
+    monkeypatch.undo()
+    ckpt.release(out)
+    assert len(plans) == 1, plans
+    p = plans[0]
     assert "CartesianProduct" not in p
     assert p.count("InMemoryTableScan") >= 3, p
     # The registered query's public plan is the materialized scan.

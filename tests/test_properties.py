@@ -385,7 +385,13 @@ def test_durable_checkpoint_mode_matches_local(spark):
         connected_components,
         connected_components_star,
     )
-    from miningfrequentpattern_spark.operators.graph import kcore, pagerank
+    from miningfrequentpattern_spark.operators.graph import (
+        kcore,
+        ktruss,
+        pagerank,
+        personalized_pagerank,
+        sssp_distances,
+    )
     from miningfrequentpattern_spark.operators.mining import (
         apriori_frequent_itemsets,
     )
@@ -396,6 +402,8 @@ def test_durable_checkpoint_mode_matches_local(spark):
         "doc_a long, doc_b long",
     )
     g = edges.selectExpr("doc_a AS src", "doc_b AS dst")
+    wg = g.withColumn("weight", (F.col("src") + 1).cast("double"))
+    seeds = spark.createDataFrame([(0,), (3,)], "id long")
     baskets = spark.createDataFrame(
         [(["a", "b", "c"],), (["a", "b"],), (["b", "c"],), (["a", "c"],)],
         "items array<string>",
@@ -408,7 +416,10 @@ def test_durable_checkpoint_mode_matches_local(spark):
         lambda d: connected_components(edges, durable=d),
         lambda d: connected_components_star(edges, durable=d),
         lambda d: kcore(g, k=2, durable=d),
+        lambda d: ktruss(g, k=3, durable=d),
         lambda d: pagerank(g, iterations=3, durable=d),
+        lambda d: personalized_pagerank(g, seeds, iterations=3, durable=d),
+        lambda d: sssp_distances(wg, seeds, max_rounds=4, durable=d),
         lambda d: apriori_frequent_itemsets(
             baskets, min_support=0.5, durable=d
         ),

@@ -139,3 +139,36 @@ def test_sssp_null_seed_is_not_a_node(spark):
         for r in sssp_distances(edges, seeds, max_rounds=2).collect()
     }
     assert got == {(1, 0.0), (2, 1.0)}
+
+
+def test_sssp_frees_superseded_generations(spark, monkeypatch):
+    """Each round retires the dist and frontier it replaced: on a
+    9-edge path the storage held at every frontier probe stays at
+    the cached edges plus one dist and one frontier, however many
+    rounds have run."""
+    from miningfrequentpattern_spark.operators import ckpt
+
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(9)],
+        "src long, dst long, weight double",
+    )
+    seeds = spark.createDataFrame([(0,)], "id long")
+    jsc = spark.sparkContext._jsc
+    # new persistent RDDs by id: an earlier test's may be collected
+    base = set(jsc.getPersistentRDDs().keys())
+    held = []
+    real_is_empty = type(edges).isEmpty
+
+    def probe(self):
+        held.append(len(set(jsc.getPersistentRDDs().keys()) - base))
+        return real_is_empty(self)
+
+    monkeypatch.setattr(type(edges), "isEmpty", probe)
+    out = sssp_distances(edges, seeds, max_rounds=8)
+    monkeypatch.undo()
+    assert len(held) == 8, held
+    assert max(held) <= 3, held
+    assert {r["id"]: r["dist"] for r in out.collect()} == {
+        i: float(i) for i in range(9)
+    }
+    ckpt.release(out)
