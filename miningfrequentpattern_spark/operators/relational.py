@@ -238,10 +238,11 @@ def global_row_number(
     because `order_exprs` must include a unique tiebreak column, and
     the range exchange is planned once and reused (ReusedExchange,
     asserted in tests/test_plans.py). Spark reuses it only when the
-    count leg reads the same columns as the rank leg, i.e. when every
-    input column is an order key: otherwise the count leg prunes the
-    rest, gets its own range exchange, samples its own range bounds,
-    and the offsets stop matching the local ranks. Per-partition row
+    count leg reads the same columns as the rank leg: a plain row
+    count would prune the non-key columns, get its own range exchange
+    with its own sampled bounds, and the offsets would stop matching
+    the local ranks. So the count leg counts a value built from every
+    column. Per-partition row
     counts are capped at 2^33 by the id layout (~8.6 B rows per
     partition — size num_partitions so partitions stay far under
     that, which memory demands anyway).
@@ -260,7 +261,10 @@ def global_row_number(
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.shiftright(F.col("_mid"), 33).cast("int"))
     )
-    counts = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
+    # Always true, but unlike count(struct(*)), which the optimizer
+    # folds to count(1), this CASE keeps every column referenced.
+    every_row = F.when(F.col("_mid") >= 0, F.struct("*"))
+    counts = part.groupBy("_pid").agg(F.count(every_row).alias("_cnt"))
     w_off = (
         Window.orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)

@@ -14,9 +14,10 @@ key, sort within partitions (order columns NULLs last), raise on a
 tied order, and hand a pandas body one frame per Arrow batch that
 holds only complete series, plus a per-row series ordinal. The seam
 alone delimits and orders series; no body re-sorts or re-checks ties.
-A body vectorised across series (ewma's grouped ewm) pays pandas'
-per-call cost once per batch; a body that needs one series at a time
-wraps it in `_each_series`.
+Every body is vectorised across the series of its batch: ewma is one
+grouped `ewm`, and holt_linear, holt_winters_additive and ttl_dedup
+each call their numpy kernel in `recurrences.py` once per batch, the
+same kernel their streaming twins step one key at a time.
 
 Scale posture: ONE shuffle (the repartition on the series keys);
 per-task memory is bounded by one Arrow batch plus the longest
@@ -40,6 +41,14 @@ from pyspark.sql import types as ST
 from ..functions.durations import duration_us
 from ..functions.guards import reject_working_cols as _reject_working_cols
 from ..functions.rounding import round4
+from .recurrences import (
+    fresh_state,
+    holt_step,
+    holt_winters_init,
+    holt_winters_step,
+    series_starts,
+    ttl_step,
+)
 
 
 def _adjacent_equal(arr: np.ndarray) -> np.ndarray:
@@ -70,7 +79,8 @@ def _per_group_map_over_sorted_partitions(
     series of a batch may continue into the next one, so it is held
     back and prepended to the next batch (per-task memory = one batch
     plus one series). `batch_fn` returns the output frame for all of
-    the input's series.
+    the input's series; since no series spans two calls, a body that
+    runs a `recurrences` kernel starts it from fresh state each call.
 
     NULL-key handling matches groupBy semantics (all-NULL keys form
     one series). Bodies that group by series must group on `gid`, not
@@ -124,28 +134,31 @@ def _per_group_map_over_sorted_partitions(
     )
 
 
-def _series_slices(gid: np.ndarray) -> list[tuple[int, int]]:
-    """The (lo, hi) row range of each series in a seam frame."""
-    starts = np.flatnonzero(np.diff(gid, prepend=-1))
-    ends = np.append(starts[1:], len(gid))
-    return list(zip(starts.tolist(), ends.tolist()))
-
-
-def _each_series(group_fn):
-    """Adapt a one-series body `group_fn(frame) -> frame` to the
-    seam's per-batch contract: slice each series out of the batch,
-    call `group_fn` on it, concatenate the results."""
-
-    def batch_fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
-        return pd.concat(
-            [
-                group_fn(pdf.iloc[lo:hi].reset_index(drop=True))
-                for lo, hi in _series_slices(gid)
-            ],
-            ignore_index=True,
-        )
-
-    return batch_fn
+def _double_series(df, keys, order_col, value_col, tiebreak_col, out_cols):
+    """The seam input of ewma, holt_linear and holt_winters_additive:
+    (keys, order_col[, tiebreak_col], value_col cast to double, so
+    Arrow hands pandas a float64 block), its sort columns, and the
+    output schema with `out_cols` appended as doubles. A tiebreak that
+    is a key, the order or the value column is not selected twice (a
+    duplicate name raises AMBIGUOUS_REFERENCE)."""
+    extra = (
+        [tiebreak_col]
+        if tiebreak_col
+        and tiebreak_col not in (*keys, order_col, value_col)
+        else []
+    )
+    base = df.select(
+        *keys,
+        order_col,
+        *extra,
+        F.col(value_col).cast("double").alias(value_col),
+    )
+    schema = ST.StructType(
+        list(base.schema.fields)
+        + [ST.StructField(c, ST.DoubleType()) for c in out_cols]
+    )
+    sort_cols = [order_col] + ([tiebreak_col] if tiebreak_col else [])
+    return base, sort_cols, schema
 
 
 def ewma(
@@ -166,10 +179,7 @@ def ewma(
     Returns the input's (keys, order_col, value_col) columns plus
     `out_col` (double), one row per input row.
 
-    The value column is cast to double BEFORE the seam so the Arrow
-    transfer hands pandas a float64 block (a decimal column would
-    arrive as object dtype and fall off the vectorized path). The seam
-    orders each series by (order_col[, tiebreak_col]), NULL order
+    The seam orders each series by (order_col[, tiebreak_col]), NULL order
     values last, and hands the body one Arrow batch of complete series
     at a time; the body is one `groupby(series ordinal).ewm(adjust=
     False)` over the whole batch. DUPLICATE order values within a
@@ -184,28 +194,9 @@ def ewma(
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    # The tiebreak may BE the value column, the order column, or one
-    # of the keys (the streaming twins order by (ts, value) — the
-    # holt_linear guard): selecting it beside any column already in
-    # the projection would duplicate the name and raise
-    # AMBIGUOUS_REFERENCE (code-review r8 finding; ADVICE r8 widened
-    # the guard from value_col to every already-selected column).
-    extra = (
-        [tiebreak_col]
-        if tiebreak_col
-        and tiebreak_col not in (*keys, order_col, value_col)
-        else []
+    base, sort_cols, schema = _double_series(
+        df, keys, order_col, value_col, tiebreak_col, [out_col]
     )
-    base = df.select(
-        *keys,
-        order_col,
-        *extra,
-        F.col(value_col).cast("double").alias(value_col),
-    )
-    schema = ST.StructType(
-        list(base.schema.fields) + [ST.StructField(out_col, ST.DoubleType())]
-    )
-    sort_cols = [order_col] + ([tiebreak_col] if tiebreak_col else [])
 
     def fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
         out = pdf.copy(deep=False)
@@ -967,75 +958,42 @@ def holt_linear(
     The recurrence runs in ewma's seam (Arrow float64 block, series
     ordered by the seam on (order_col[, tiebreak_col]) with NULL order
     values last, duplicate order keys RAISE unless `tiebreak_col`
-    disambiguates) with an explicit per-step loop:
-    pandas has no two-state ewm, and the explicit loop is what makes
-    the arithmetic BITWISE the recursive-CTE oracle's — each step is
-    the same two fused expressions in the same order, and α/β are
-    restricted to values whose complements round-trip exactly in
-    float64 ((1−0.2) == 0.8 bitwise), the r52 parity stance. Series
-    length is bounded by the time grain (days per series), so the
-    Python loop is ~hundreds of iterations per group, not corpus-
-    sized. Scale posture: identical to ewma — one shuffle on the
-    series key, per-series task memory, NO driver-side anything.
+    disambiguates). Each Arrow batch makes one call to
+    `recurrences.holt_step`, the kernel `holt_stream` also steps; the
+    batch form then backfills each series' first trend with x₂ − x₁,
+    which a stream cannot know when it emits row 1. Every step is the
+    same two expressions in the same order as the recursive-CTE
+    oracle's, and α/β are restricted to values whose complements
+    round-trip exactly in float64 ((1−0.2) == 0.8 bitwise), so the
+    arithmetic is bitwise the oracle's (the r52 parity stance). Scale
+    posture: identical to ewma — one shuffle on the series key,
+    per-series task memory, NO driver-side anything.
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     if not 0.0 < beta <= 1.0:
         raise ValueError(f"beta must be in (0, 1], got {beta}")
-    # The tiebreak may BE the value column, the order column, or a
-    # key (the ewma r8 guard, widened here in the r10 sweep — the
-    # value-only check re-exposed the duplicate-label crash for
-    # tiebreak_col=key).
-    extra = (
-        [tiebreak_col]
-        if tiebreak_col
-        and tiebreak_col not in (*keys, order_col, value_col)
-        else []
-    )
-    # NULL values are EXCLUDED (r10 sweep, the cusum_drift stance):
-    # the recurrence reads x[t] every step, so one NULL arrives as
-    # NaN and poisons level AND trend for the entire rest of the
+    # NULL values are EXCLUDED: the recurrence reads x[t] every step,
+    # so one NULL would poison level AND trend for the rest of the
     # series — silent tail corruption, not a skipped point.
-    base = df.filter(F.col(value_col).isNotNull()).select(
-        *keys,
-        order_col,
-        *extra,
-        F.col(value_col).cast("double").alias(value_col),
+    base, sort_cols, schema = _double_series(
+        df.filter(F.col(value_col).isNotNull()),
+        keys, order_col, value_col, tiebreak_col, ["level", "trend"],
     )
-    schema = ST.StructType(
-        list(base.schema.fields)
-        + [
-            ST.StructField("level", ST.DoubleType()),
-            ST.StructField("trend", ST.DoubleType()),
-        ]
-    )
-    sort_cols = [order_col] + ([tiebreak_col] if tiebreak_col else [])
-    one_m_a, one_m_b = 1.0 - alpha, 1.0 - beta
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
         x = pdf[value_col].to_numpy(dtype="float64")
-        n = len(x)
-        lv = np.empty(n, dtype="float64")
-        tr = np.empty(n, dtype="float64")
-        lv[0] = x[0]
-        if n == 1:
-            pdf["level"] = lv
-            pdf["trend"] = pd.array([pd.NA], dtype="Float64")
-            return pdf
-        level, trend = x[0], x[1] - x[0]
-        tr[0] = trend
-        for t in range(1, n):
-            new_level = alpha * x[t] + one_m_a * (level + trend)
-            trend = beta * (new_level - level) + one_m_b * trend
-            level = new_level
-            lv[t] = level
-            tr[t] = trend
-        pdf["level"] = lv
-        pdf["trend"] = tr
-        return pdf
+        state = fresh_state(gid, np.float64, np.float64, np.int64)
+        level, trend = holt_step(state, x, gid, alpha, beta)
+        lo = series_starts(gid)
+        lo = lo[np.diff(lo, append=len(x)) > 1]
+        trend[lo] = x[lo + 1] - x[lo]
+        out = pdf.copy(deep=False)
+        out["level"], out["trend"] = level, trend
+        return out
 
     return _per_group_map_over_sorted_partitions(
-        base, keys, sort_cols, _each_series(fn), schema
+        base, keys, sort_cols, fn, schema
     )
 
 
@@ -1193,10 +1151,10 @@ def ttl_dedup(
 
     The seam (`_per_group_map_over_sorted_partitions`) shuffles once on
     the key and orders each key's rows by (ts, tiebreak), NULL
-    tiebreaks last; the body walks each complete series of an Arrow
-    batch with `_chain`, a searchsorted JUMP per kept row rather than
-    a Python step per input row. Per-task state = one batch plus one
-    series; nothing is carried between series. A recursive-CTE oracle
+    tiebreaks last; the body makes one call per Arrow batch to
+    `recurrences.ttl_step`, the kernel `ttl_dedup_stream` also steps.
+    Per-task state = one batch plus one series; nothing is carried
+    between batches. A recursive-CTE oracle
     computes the identical chain (the r82/r28 stance; its `ORDER BY
     epoch_us(ts), event_id` also puts NULL tiebreaks last). Ordering:
     (ts, tiebreak) must be a total order per key — tied timestamps
@@ -1205,10 +1163,8 @@ def ttl_dedup(
     otherwise shuffle-order nondeterminism).
     """
     ttl_us = duration_us(ttl, what="ttl")
-    # The tiebreak may already ride in keys/carry or BE the ts column
-    # (the ewma r8 guard, extended here in the r10 sweep): selecting
-    # it twice crashes deep in the pandas worker with an opaque
-    # non-unique-label error.
+    # The tiebreak may already ride in keys/carry or BE the ts column:
+    # selecting it twice would crash in the pandas worker.
     extra = (
         [tiebreak_col]
         if tiebreak_col and tiebreak_col not in (*keys, *carry, ts_col)
@@ -1236,27 +1192,10 @@ def ttl_dedup(
         else []
     )
 
-    def _chain(us: np.ndarray) -> np.ndarray:
-        """Greedy TTL chain over one key's SORTED epoch-micros: next
-        kept index found by a searchsorted jump, so the Python-level
-        loop runs once per KEPT row (numpy-C per step), never once
-        per input row."""
-        n = us.size
-        kept = np.zeros(n, dtype=bool)
-        i = 0
-        while i < n:
-            kept[i] = True
-            nxt = int(np.searchsorted(us[i:], us[i] + ttl_us)) + i
-            i = nxt if nxt > i else i + 1
-        return kept
-
     def fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
-        us = pdf["_us"].to_numpy()
-        kept = np.zeros(len(pdf), dtype=bool)
-        for lo, hi in _series_slices(gid):
-            kept[lo:hi] = _chain(us[lo:hi])
+        state = fresh_state(gid, np.int64, bool)
         out = pdf.copy(deep=False)
-        out["is_kept"] = kept
+        out["is_kept"] = ttl_step(state, pdf["_us"].to_numpy(), gid, ttl_us)
         return out
 
     return _per_group_map_over_sorted_partitions(
@@ -1294,12 +1233,13 @@ def holt_winters_additive(
 
     Shape: the ewma/holt seam — ONE shuffle on the series keys, each
     series ordered by order_col (NULLs last) before the body sees it,
-    per-task state = (l, b, m-slot buffer), series length bounded by
-    the calendar grain. Arithmetic parity: the per-step
-    expressions are written in EXACTLY the oracle's operation order
-    (sequential sum()/m means, not numpy pairwise means), so a
-    recursive CTE carrying the seasonal buffer as a LIST streams
-    bitwise-identical float64 (the r82 stance). Series shorter than
+    series length bounded by the calendar grain. Each Arrow batch makes
+    one call to `recurrences.holt_winters_init` and one to
+    `holt_winters_step`, whose expressions follow EXACTLY the oracle's
+    operation order (left-to-right sums for the init means, not numpy
+    pairwise means), so a recursive CTE carrying the seasonal buffer
+    as a LIST streams bitwise-identical float64 (the r82 stance).
+    Series shorter than
     2m raise (the init needs two full seasons; a silent NULL would
     look like a flat model). Ties in order_col raise in the seam (the
     ewma contract).
@@ -1313,58 +1253,37 @@ def holt_winters_additive(
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period}")
     m = int(period)
-    # NULL values are EXCLUDED (r10 sweep, the holt_linear/cusum
-    # stance): one NULL inside the first two seasons NaN-poisons
-    # l0/b0 and the whole seasonal buffer — an all-NULL model that
-    # silently passes the 2m length check it was counted toward.
-    # Filtering FIRST also makes the length check count usable rows.
-    base = df.filter(F.col(value_col).isNotNull()).select(
-        *keys,
-        order_col,
-        F.col(value_col).cast("double").alias(value_col),
-    )
-    schema = ST.StructType(
-        list(base.schema.fields)
-        + [
-            ST.StructField("level", ST.DoubleType()),
-            ST.StructField("trend", ST.DoubleType()),
-            ST.StructField("seasonal", ST.DoubleType()),
-            ST.StructField("fitted", ST.DoubleType()),
-        ]
+    # NULL values are EXCLUDED: one NULL inside the first two seasons
+    # would poison the init and the whole seasonal ring. Filtering
+    # FIRST also makes the length check count usable rows.
+    base, sort_cols, schema = _double_series(
+        df.filter(F.col(value_col).isNotNull()),
+        keys, order_col, value_col, None,
+        ["level", "trend", "seasonal", "fitted"],
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = list(pdf[value_col])
-        n = len(x)
-        if n < 2 * m:
+    def fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
+        x = pdf[value_col].to_numpy(dtype="float64")
+        starts = series_starts(gid)
+        lens = np.diff(starts, append=len(x))
+        if (lens < 2 * m).any():
             raise ValueError(
-                f"holt_winters_additive: series has {n} rows; init "
-                f"needs two full seasons (>= {2 * m})"
+                f"holt_winters_additive: series has {lens.min()} rows; "
+                f"init needs two full seasons (>= {2 * m})"
             )
-        lev = [None] * n
-        tre = [None] * n
-        sea = [None] * n
-        fit = [None] * n
-        l0 = sum(x[:m]) / m
-        b0 = (sum(x[m:2 * m]) / m - sum(x[:m]) / m) / m
-        buf = [x[i] - l0 for i in range(m)]
-        lev[m - 1], tre[m - 1], sea[m - 1] = l0, b0, buf[m - 1]
-        lcur, bcur = l0, b0
-        for t in range(m, n):
-            s_tm = buf[0]
-            f_t = lcur + bcur + s_tm
-            l_new = alpha * (x[t] - s_tm) + (1.0 - alpha) * (lcur + bcur)
-            b_new = beta * (l_new - lcur) + (1.0 - beta) * bcur
-            s_new = gamma * (x[t] - lcur - bcur) + (1.0 - gamma) * s_tm
-            buf = buf[1:] + [s_new]
-            lcur, bcur = l_new, b_new
-            lev[t], tre[t], sea[t], fit[t] = l_new, b_new, s_new, f_t
-        pdf["level"], pdf["trend"] = lev, tre
-        pdf["seasonal"], pdf["fitted"] = sea, fit
-        return pdf
+        state = holt_winters_init(x, starts, m)
+        out = np.full((4, len(x)), np.nan)
+        out[:3, starts + m - 1] = state[0], state[1], state[2][:, m - 1]
+        run = np.arange(len(x)) - starts[gid] >= m
+        out[:, run] = holt_winters_step(
+            state, x[run], gid[run], alpha, beta, gamma
+        )
+        res = pdf.copy(deep=False)
+        res["level"], res["trend"], res["seasonal"], res["fitted"] = out
+        return res
 
     return _per_group_map_over_sorted_partitions(
-        base, keys, [order_col], _each_series(fn), schema
+        base, keys, sort_cols, fn, schema
     )
 
 

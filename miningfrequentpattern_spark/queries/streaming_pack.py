@@ -125,41 +125,35 @@ def t04_dedup_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t05_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5 (batch form): per-user running counts via the SAME pandas
-    state function the streaming applyInPandasWithState variant uses —
-    each user's events still reach it as one whole pandas frame.
-    Oracle-checked because the final state is deterministic.
-
-    The sorted-partition seam (`_per_group_map_over_sorted_partitions`)
-    runs the per-group function through `_each_series`, paying the
-    Python/Arrow round-trip per Arrow batch rather than per user; only
-    the two consumed columns cross the boundary. Same single user_id
-    exchange as `groupBy(user_id).applyInPandas`; the streaming twin
-    (tests/test_streaming.py) keeps the applyInPandasWithState
-    semantic demo."""
-    from ..operators.timeseries import (
-        _each_series,
-        _per_group_map_over_sorted_partitions,
-    )
-
-    ev = _events(spark, sf_dir)
-
+    """T5 (batch form): per-user final counts, the state the
+    applyInPandasWithState twin (`running_user_counts_stream`) holds
+    after the last micro-batch. Oracle-checked because the final
+    state is deterministic. The sorted-partition seam hands the body
+    one Arrow batch of whole users at a time, after one user_id
+    exchange; two `np.bincount` calls over the series ids count every
+    user of the batch at once, and only the two consumed columns cross
+    the boundary."""
+    import numpy as np
     import pandas as pd
 
-    def counts(pdf: pd.DataFrame) -> pd.DataFrame:
+    from ..operators.recurrences import series_starts
+    from ..operators.timeseries import _per_group_map_over_sorted_partitions
+
+    def counts(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
+        purchase = (pdf["event_type"] == "purchase").to_numpy()
         return pd.DataFrame(
             {
-                "user_id": [pdf["user_id"].iloc[0]],
-                "n_events": [len(pdf)],
-                "n_purchases": [int((pdf["event_type"] == "purchase").sum())],
+                "user_id": pdf["user_id"].to_numpy()[series_starts(gid)],
+                "n_events": np.bincount(gid),
+                "n_purchases": np.bincount(gid[purchase], minlength=gid[-1] + 1),
             }
         )
 
     return _per_group_map_over_sorted_partitions(
-        ev.select("user_id", "event_type"),
+        _events(spark, sf_dir).select("user_id", "event_type"),
         keys=["user_id"],
         sort_cols=[],
-        batch_fn=_each_series(counts),
+        batch_fn=counts,
         schema="user_id BIGINT, n_events BIGINT, n_purchases BIGINT",
     )
 

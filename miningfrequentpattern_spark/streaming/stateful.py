@@ -23,9 +23,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.durations import duration_us
+from ..operators.recurrences import holt_step, step_one_series, ttl_step
 
 RUNNING_SCHEMA = "user_id BIGINT, n_events BIGINT, n_purchases BIGINT"
 STATE_SCHEMA = "n BIGINT, p BIGINT"
+
+
+def _sorted_micro_batch(batches, by: list[str]) -> pd.DataFrame | None:
+    """A key's whole micro-batch sorted on `by`, or None when empty.
+    Its Arrow chunks arrive in no order, so sorting chunk by chunk
+    would let a later chunk step the key's state first."""
+    chunks = [pdf for pdf in batches if len(pdf)]
+    if not chunks:
+        return None
+    return pd.concat(chunks, ignore_index=True).sort_values(by, kind="mergesort")
 
 
 def _update_user_counts(
@@ -195,11 +206,9 @@ def running_user_counts_tws(events_stream: DataFrame) -> DataFrame:
     """T5 (modern form): arbitrary stateful processing via
     transformWithStateInPandas — result-identical to
     running_user_counts_stream (asserted in tests/test_streaming.py,
-    skipped where the runtime lacks TWS's protobuf dependency: the
-    state-server protocol needs google.protobuf, which this container
-    does not bundle — re-probed and still absent 2026-08-14 round 5;
-    the applyInPandasWithState twin above is the always-available
-    path)."""
+    skipped where the runtime lacks google.protobuf, which the TWS
+    state-server protocol needs; the applyInPandasWithState twin above
+    is the always-available path)."""
     try:
         import google.protobuf  # noqa: F401
     except ImportError:
@@ -239,10 +248,8 @@ def _update_cdc_snapshot(
     so the final state is independent of how the feed splits into
     batches (asserted against the batch operator in tests)."""
     best = tuple(state.get) if state.exists else None
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        pdf = pdf.sort_values(["ts", "event_id"])
+    pdf = _sorted_micro_batch(batches, ["ts", "event_id"])
+    if pdf is not None:
         row = pdf.iloc[-1]
         cand = (
             int(row["ts"].value // 1_000),  # pandas ns -> micros
@@ -314,46 +321,34 @@ def _make_cusum_update(target: float, slack: float, threshold: float):
         feed requirement of any streaming recurrence; a Kafka
         key-partitioned feed satisfies it, an unordered backfill
         does not (replay through the batch operator instead)."""
+        pdf = _sorted_micro_batch(batches, ["ts", "value"])
+        if pdf is None:
+            return
         p, runmin = (
             (float(state.get[0]), float(state.get[1]))
             if state.exists
             else (0.0, float("inf"))  # inf = "no prefix yet"
         )
-        seen = state.exists
-        # Buffer the WHOLE micro-batch before sorting (the
-        # ttl_dedup_stream chunk fix): the group's rows arrive as
-        # multiple Arrow chunks with no ordering guarantee, and a
-        # per-chunk sort lets a later-timestamped chunk fold into
-        # the (p, runmin) state first — out-of-order recursion,
-        # broken batch parity.
-        chunks = [pdf for pdf in batches if not pdf.empty]
-        for pdf in (
-            [pd.concat(chunks, ignore_index=True)] if chunks else []
-        ):
-            seen = True
-            pdf = pdf.sort_values(["ts", "value"], kind="mergesort")
-            d = pdf["value"].to_numpy(dtype="float64") - target - slack
-            pp = p + np.cumsum(d)
-            rm = np.minimum(np.minimum.accumulate(pp), runmin)
-            cusum = pp - np.minimum(0.0, rm)
-            p, runmin = float(pp[-1]), float(rm[-1])
-            yield pd.DataFrame(
-                {
-                    "event_type": key[0],
-                    # .value/.astype int64 on a ns-normalized series:
-                    # arrow may hand either ns or us units, so pin ns
-                    # first (the cdc twin's micros convention)
-                    "ts_us": (
-                        pdf["ts"].astype("datetime64[ns]").astype("int64")
-                        // 1_000
-                    ).to_numpy(),
-                    "value": pdf["value"].to_numpy(dtype="float64"),
-                    "cusum": cusum,
-                    "drifted": cusum > threshold,
-                }
-            )
-        if seen:
-            state.update((p, runmin))
+        d = pdf["value"].to_numpy(dtype="float64") - target - slack
+        pp = p + np.cumsum(d)
+        rm = np.minimum(np.minimum.accumulate(pp), runmin)
+        cusum = pp - np.minimum(0.0, rm)
+        yield pd.DataFrame(
+            {
+                "event_type": key[0],
+                # .value/.astype int64 on a ns-normalized series:
+                # arrow may hand either ns or us units, so pin ns
+                # first (the cdc twin's micros convention)
+                "ts_us": (
+                    pdf["ts"].astype("datetime64[ns]").astype("int64")
+                    // 1_000
+                ).to_numpy(),
+                "value": pdf["value"].to_numpy(dtype="float64"),
+                "cusum": cusum,
+                "drifted": cusum > threshold,
+            }
+        )
+        state.update((float(pp[-1]), float(rm[-1])))
 
     return update
 
@@ -561,89 +556,42 @@ HOLT_STATE_SCHEMA = "level DOUBLE, trend DOUBLE, n BIGINT, x0 DOUBLE"
 
 
 def _make_holt_update(alpha: float, beta: float):
-    one_m_a, one_m_b = 1.0 - alpha, 1.0 - beta
-
     def update(
         key: tuple[Any, ...],
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        """Streaming Holt linear smoothing (the r82 batch twin):
-        state is (level, trend, n_seen, first_x) — the recurrence's
-        exact sufficient statistic plus the two-observation init
-        handshake (trend_1 = x_2 − x_1 needs the SECOND observation,
-        which may land batches later; n/x0 carry the init across the
-        split). The per-step loop is bitwise the batch operator's
-        (same two fused expressions, same order), so any IN-ORDER
-        batch split emits identical levels/trends from the SECOND
-        row of each key onward — proven against holt_linear over a
-        full replay AND under explicit splits in tests. The ONE
-        documented batch/stream deviation is the first row's trend:
-        the batch operator backfills trend_1 = x_2 − x_1
-        retroactively, which a true stream cannot know at row-1
-        emission time — the streamed first row carries trend = NULL
-        instead (and is never re-emitted; the init pair still seeds
-        the recurrence with the IDENTICAL expressions — level_2 =
-        α·x_2 + (1−α)·(x_1 + (x_2−x_1)) evaluated in the same order
-        on both sides — so row 2 onward matches bitwise). Same
-        per-key-ordered-feed contract as cusum_stream."""
-        if state.exists:
-            level, trend, n, x0 = state.get
-            level, trend, n, x0 = (
-                float(level), float(trend), int(n), float(x0)
-            )
-        else:
-            level, trend, n, x0 = 0.0, 0.0, 0, 0.0
-        # Buffer the whole micro-batch before sorting (the
-        # ttl_dedup_stream chunk fix): per-chunk sorting could seed
-        # the (n, x0) init handshake from a later-timestamped chunk
-        # delivered first, diverging every subsequent level/trend
-        # from the batch operator.
-        chunks = [pdf for pdf in batches if not pdf.empty]
-        for pdf in (
-            [pd.concat(chunks, ignore_index=True)] if chunks else []
-        ):
-            pdf = pdf.sort_values(["ts", "value"], kind="mergesort")
-            xs = pdf["value"].to_numpy(dtype="float64")
-            lv = np.empty(len(xs), dtype="float64")
-            tr = np.empty(len(xs), dtype="float64")
-            mask_null = np.zeros(len(xs), dtype=bool)
-            for i, x in enumerate(xs):
-                if n == 0:
-                    level, x0 = x, x
-                    lv[i], tr[i] = level, 0.0
-                    mask_null[i] = True  # no trend evidence yet
-                elif n == 1:
-                    # Init handshake: seed trend from the first pair
-                    # exactly as the batch operator does, then run the
-                    # SAME step expressions in the same order — the
-                    # batch lv[1]/tr[1] bitwise.
-                    trend = x - x0
-                    new_level = alpha * x + one_m_a * (level + trend)
-                    trend = beta * (new_level - level) + one_m_b * trend
-                    level = new_level
-                    lv[i], tr[i] = level, trend
-                else:
-                    new_level = alpha * x + one_m_a * (level + trend)
-                    trend = beta * (new_level - level) + one_m_b * trend
-                    level = new_level
-                    lv[i], tr[i] = level, trend
-                n += 1
-            out = pd.DataFrame(
-                {
-                    "event_type": key[0],
-                    "ts_us": (
-                        pdf["ts"].astype("datetime64[ns]").astype("int64")
-                        // 1_000
-                    ).to_numpy(),
-                    "value": xs,
-                    "level": lv,
-                    "trend": pd.array(tr, dtype="Float64"),
-                }
-            )
-            out.loc[mask_null, "trend"] = pd.NA
-            yield out
-        state.update((level, trend, n, x0))
+        """Streaming Holt linear smoothing: `recurrences.holt_step`,
+        the kernel of the r82 batch twin, from (level, trend, n_seen)
+        in GroupState. Any IN-ORDER batch split emits holt_linear's
+        values except the first row's trend, which holt_linear
+        backfills with x_2 − x_1 and a stream emits as NULL. The
+        state's unread fourth field (the first value) keeps existing
+        checkpoints' state schema. Same per-key-ordered-feed contract
+        as cusum_stream."""
+        pdf = _sorted_micro_batch(batches, ["ts", "value"])
+        if pdf is None:
+            return
+        xs = pdf["value"].to_numpy(dtype="float64")
+        level, trend, n, x0 = state.get if state.exists else (
+            0.0, 0.0, 0, xs[0]
+        )
+        (level, trend, n), (lv, tr) = step_one_series(
+            holt_step, (level, trend, n), xs, alpha, beta
+        )
+        state.update((level, trend, n, float(x0)))
+        yield pd.DataFrame(
+            {
+                "event_type": key[0],
+                "ts_us": (
+                    pdf["ts"].astype("datetime64[ns]").astype("int64")
+                    // 1_000
+                ).to_numpy(),
+                "value": xs,
+                "level": lv,
+                "trend": tr,
+            }
+        )
 
     return update
 
@@ -656,10 +604,7 @@ def holt_stream(
     r82), turning the trend-aware forecast baseline into a live
     signal (next-batch expectation = level + trend at any moment).
     Update-mode emission; four scalars of state per key."""
-    # Same parameter domain as the batch twin (code-review r9: the
-    # stream silently accepted alpha/beta the batch side rejects —
-    # "bitwise batch parity" cannot hold for parameters the batch
-    # refuses to run).
+    # the batch twin's parameter domain
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     if not 0.0 < beta <= 1.0:
@@ -755,19 +700,15 @@ def ttl_dedup_stream(
     with its is_kept verdict.
 
     Why this exists beside the r87 dropDuplicatesWithinWatermark
-    twin: the built-in keys state eviction off the WATERMARK, so
-    inter-arrival gaps between delay and 2*delay are implementation-
-    timing territory (the documented ambiguity band in
-    tests/test_ttl_dedup.py). This operator owns its state — a single
-    anchor timestamp per key, updated by the chain rule itself — so
-    it reproduces the batch chain EXACTLY on in-order streams,
-    ambiguity band included. That is the textbook case for custom
-    stateful processing: when the built-in's state lifecycle is not
-    your operator's semantics, applyInPandasWithState is the seam.
+    twin: the built-in evicts state off the WATERMARK, so gaps between
+    delay and 2*delay are implementation-timing territory (the
+    ambiguity band in tests/test_ttl_dedup.py). This operator owns its
+    state and steps it with `recurrences.ttl_step`, the kernel
+    ttl_dedup runs per Arrow batch, so it reproduces the batch chain
+    EXACTLY on in-order streams, ambiguity band included.
 
     State is ONE int64 per key (the last kept anchor in epoch
-    micros) — the state store holds O(#keys), not O(#events); the
-    chain is sequential per key by nature, keys parallelize.
+    micros): the state store holds O(#keys), not O(#events).
     In-order contract: rows must arrive in event-time order per key
     across micro-batches (the replay harness guarantees it; a
     production feed uses the upstream log's per-key ordering) —
@@ -783,30 +724,12 @@ def ttl_dedup_stream(
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        anchor = state.get[0] if state.exists else None
-        # Buffer the WHOLE micro-batch for this key before sorting:
-        # applyInPandasWithState delivers a key's batch as multiple
-        # Arrow chunks (arrow.maxRecordsPerBatch-capped) with no
-        # intra-group ordering guarantee — sorting each chunk
-        # independently would let a later-timestamped chunk advance
-        # the anchor past earlier rows, breaking exact parity with
-        # the batch chain. Memory is one key's micro-batch volume
-        # (per-key, not per-partition), the price of the exact-chain
-        # contract; the state itself stays one int64.
-        chunks = [pdf for pdf in batches if len(pdf)]
-        if not chunks:
+        pdf = _sorted_micro_batch(batches, ["ts", "event_id"])
+        if pdf is None:
             return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
-        us = (
-            pdf["ts"].astype("datetime64[us]").astype("int64")
-        ).to_numpy()
-        kept = np.zeros(len(pdf), dtype=bool)
-        for i, t in enumerate(us):
-            if anchor is None or t >= anchor + ttl_us:
-                kept[i] = True
-                anchor = int(t)
+        us = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
+        seed = (state.get[0], True) if state.exists else (0, False)
+        (anchor, _), kept = step_one_series(ttl_step, seed, us, ttl_us)
         yield pd.DataFrame(
             {
                 "user_id": key[0],
@@ -815,17 +738,11 @@ def ttl_dedup_stream(
                 "is_kept": kept,
             }
         )
-        if anchor is not None:
-            state.update((int(anchor),))
+        state.update((anchor,))
 
     return (
-        # NULL-ts rows are dropped exactly like the batch twin drops
-        # them (ttl_dedup filters ts.isNotNull()): without the filter
-        # pandas turns NaT into the int64-min sentinel, which the
-        # chain rule would treat as an ancient timestamp — marking
-        # the row kept and storing a garbage anchor that poisons
-        # every later verdict for the key (code-review r9, verified
-        # by execution).
+        # NULL-ts rows are dropped like the batch twin drops them:
+        # pandas would turn NaT into an int64-min "ancient" timestamp
         events_stream.filter(F.col("ts").isNotNull())
         .select("user_id", "ts", "event_id")
         .groupBy("user_id")

@@ -5,8 +5,8 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persistent_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def test_khop_null_endpoints_single_distance_per_id(spark):
@@ -49,7 +49,9 @@ def test_pagerank_null_endpoint_edges_dropped(spark):
 def test_kcore_ktruss_fixpoint_release_edge_pins(spark):
     """The fixpoint exit must pin the result and release the edge
     relation it derived from — returning the lazy plan left the
-    per-round checkpoint blocks pinned for the session."""
+    per-round checkpoint blocks pinned for the session. (New
+    persistent RDDs counted by id: an earlier test's may be collected
+    meanwhile.)"""
     from miningfrequentpattern_spark.operators.graph import kcore, ktruss
 
     # triangle + pendant: kcore(2) and ktruss(3) both reach a
@@ -57,19 +59,19 @@ def test_kcore_ktruss_fixpoint_release_edge_pins(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "src bigint, dst bigint"
     )
-    before = _n_persistent(spark)
+    before = _persistent_ids(spark)
     core = kcore(edges, k=2)
     got = {r["id"] for r in core.collect()}
     assert got == {1, 2, 3}
     # only the pinned RESULT may remain; the per-round edge pins are
     # released
-    assert _n_persistent(spark) <= before + 1
-    before = _n_persistent(spark)
+    assert len(_persistent_ids(spark) - before) <= 1
+    before = _persistent_ids(spark)
     truss = ktruss(edges, k=3)
     assert {(r["s"], r["d"]) for r in truss.collect()} == {
         (1, 2), (1, 3), (2, 3)
     }
-    assert _n_persistent(spark) <= before + 1
+    assert len(_persistent_ids(spark) - before) <= 1
 
 
 @pytest.mark.parametrize(
@@ -111,11 +113,10 @@ def test_iterative_operators_release_all_but_result(spark, op, held):
             baskets, min_support=0.5
         ),
     }[op]
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
+    before = _persistent_ids(spark)
     out = run()
     assert out.count() > 0
-    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= held
+    assert len(_persistent_ids(spark) - before) <= held
 
 
 def test_item_supports_counts_basket_frequency_not_occurrences(spark):

@@ -6,13 +6,15 @@ series buffering across Arrow batch boundaries, NULL-key grouping,
 NULL order values last, and the tied-order RAISE surviving a split —
 by running the same input with the Arrow batch size capped tiny
 (series straddle batches) vs huge (they never do) and requiring
-identical results. It also pins ewma's per-batch body bitwise (==,
-not isclose) to the one-series pandas body it replaced, kept below
-as the reference.
+identical results. It also pins the per-batch bodies of ewma,
+holt_linear and holt_winters_additive bitwise (==, not isclose) to
+the one-series bodies they replaced, kept below as references and run
+series by series through `_each_series`.
 """
 
 import math
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -20,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
 from miningfrequentpattern_spark.operators.timeseries import (
-    _each_series,
     _per_group_map_over_sorted_partitions,
     ewma,
     holt_linear,
@@ -29,6 +30,25 @@ from miningfrequentpattern_spark.operators.timeseries import (
 )
 
 BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def _each_series(group_fn):
+    """Adapt a one-series body `group_fn(frame) -> frame` to the
+    seam's per-batch contract: slice each series out of the batch,
+    call `group_fn` on it, concatenate the results."""
+
+    def batch_fn(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
+        starts = np.flatnonzero(np.diff(gid, prepend=-1))
+        ends = np.append(starts[1:], len(gid))
+        return pd.concat(
+            [
+                group_fn(pdf.iloc[lo:hi].reset_index(drop=True))
+                for lo, hi in zip(starts, ends)
+            ],
+            ignore_index=True,
+        )
+
+    return batch_fn
 
 
 def _with_batch_cap(spark, cap, thunk):
@@ -388,4 +408,133 @@ def test_ewma_column_names_cannot_collide(spark):
         )
 
     got, want = _with_batch_cap(spark, 7, run)
+    assert got == want and len(got) == df.count()
+
+
+def _series_rows(spark, lengths):
+    """One series per (key, length), the NULL key included, values
+    from 1e-3 to 1e5 with a NaN in the longer series, in one
+    partition so small Arrow caps split them across batches."""
+    rows = []
+    for i, (k, n) in enumerate(lengths):
+        for t in range(n):
+            x = ((t * 37 + i * 101) % 97 - 40) * 10.0 ** ((t + i) % 9 - 3)
+            rows.append((k, t, float("nan") if t == 17 else x))
+    return spark.createDataFrame(rows, "k string, t int, x double").coalesce(1)
+
+
+def _reference_holt(df, alpha, beta):
+    """holt_linear over (k, t, x) as it ran before the lockstep
+    kernel: the same projection and seam, with the per-step loop
+    applied series by series."""
+    base = df.filter(F.col("x").isNotNull()).select("k", "t", "x")
+    schema = ST.StructType(
+        list(base.schema.fields)
+        + [
+            ST.StructField("level", ST.DoubleType()),
+            ST.StructField("trend", ST.DoubleType()),
+        ]
+    )
+    one_m_a, one_m_b = 1.0 - alpha, 1.0 - beta
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        x = pdf["x"].to_numpy(dtype="float64")
+        n = len(x)
+        lv = np.empty(n, dtype="float64")
+        tr = np.empty(n, dtype="float64")
+        lv[0] = x[0]
+        if n == 1:
+            pdf["level"] = lv
+            pdf["trend"] = pd.array([pd.NA], dtype="Float64")
+            return pdf
+        level, trend = x[0], x[1] - x[0]
+        tr[0] = trend
+        for t in range(1, n):
+            new_level = alpha * x[t] + one_m_a * (level + trend)
+            trend = beta * (new_level - level) + one_m_b * trend
+            level = new_level
+            lv[t] = level
+            tr[t] = trend
+        pdf["level"] = lv
+        pdf["trend"] = tr
+        return pdf
+
+    return _per_group_map_over_sorted_partitions(
+        base, ["k"], ["t"], _each_series(fn), schema
+    )
+
+
+@pytest.mark.parametrize("cap", [1, 7, None])
+def test_holt_batch_kernel_bitwise_equals_per_series(spark, cap):
+    df = _series_rows(
+        spark, [("a", 1), ("b", 2), ("c", 3), ("d", 40), (None, 23)]
+    )
+
+    def run():
+        return (
+            _exact(holt_linear(df, ["k"], "t", "x", 0.2, 0.3).collect()),
+            _exact(_reference_holt(df, 0.2, 0.3).collect()),
+        )
+
+    got, want = run() if cap is None else _with_batch_cap(spark, cap, run)
+    assert got == want and len(got) == df.count()
+
+
+def _reference_holt_winters(df, alpha, beta, gamma, m):
+    """holt_winters_additive over (k, t, x) as it ran before the
+    lockstep kernel: Python lists and a rotating seasonal buffer,
+    series by series."""
+    base = df.filter(F.col("x").isNotNull()).select("k", "t", "x")
+    schema = ST.StructType(
+        list(base.schema.fields)
+        + [
+            ST.StructField(c, ST.DoubleType())
+            for c in ("level", "trend", "seasonal", "fitted")
+        ]
+    )
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        x = list(pdf["x"])
+        n = len(x)
+        lev, tre, sea, fit = [None] * n, [None] * n, [None] * n, [None] * n
+        l0 = sum(x[:m]) / m
+        b0 = (sum(x[m:2 * m]) / m - sum(x[:m]) / m) / m
+        buf = [x[i] - l0 for i in range(m)]
+        lev[m - 1], tre[m - 1], sea[m - 1] = l0, b0, buf[m - 1]
+        lcur, bcur = l0, b0
+        for t in range(m, n):
+            s_tm = buf[0]
+            f_t = lcur + bcur + s_tm
+            l_new = alpha * (x[t] - s_tm) + (1.0 - alpha) * (lcur + bcur)
+            b_new = beta * (l_new - lcur) + (1.0 - beta) * bcur
+            s_new = gamma * (x[t] - lcur - bcur) + (1.0 - gamma) * s_tm
+            buf = buf[1:] + [s_new]
+            lcur, bcur = l_new, b_new
+            lev[t], tre[t], sea[t], fit[t] = l_new, b_new, s_new, f_t
+        pdf["level"], pdf["trend"] = lev, tre
+        pdf["seasonal"], pdf["fitted"] = sea, fit
+        return pdf
+
+    return _per_group_map_over_sorted_partitions(
+        base, ["k"], ["t"], _each_series(fn), schema
+    )
+
+
+@pytest.mark.parametrize("cap", [1, 7, None])
+def test_holt_winters_batch_kernel_bitwise_equals_per_series(spark, cap):
+    df = _series_rows(
+        spark, [("a", 6), ("b", 7), ("c", 13), ("d", 31), (None, 9)]
+    )
+
+    def run():
+        return (
+            _exact(
+                holt_winters_additive(
+                    df, ["k"], "t", "x", 0.2, 0.1, 0.3, period=3
+                ).collect()
+            ),
+            _exact(_reference_holt_winters(df, 0.2, 0.1, 0.3, 3).collect()),
+        )
+
+    got, want = run() if cap is None else _with_batch_cap(spark, cap, run)
     assert got == want and len(got) == df.count()

@@ -4,6 +4,7 @@ outlier-robustness, and single-observation hand pins."""
 
 from pyspark.sql import functions as F
 
+from miningfrequentpattern_spark.functions.rounding import round4
 from miningfrequentpattern_spark.operators.timeseries import theil_sen_trend
 from miningfrequentpattern_spark.sources.io import load_table
 
@@ -65,17 +66,55 @@ def test_theil_sen_duplicate_timestamps_excluded_pairwise(spark):
     assert got["sen_slope"] == -3.0
 
 
+def old_theil(df, keys, t_col, value_col):
+    """theil_sen_trend's former self-join + percentile formulation,
+    without the localCheckpoint, kept as the operator's reference."""
+    t = F.col(t_col).cast("double")
+    x = F.col(value_col).cast("double")
+    base = df.filter(t.isNotNull() & x.isNotNull()).select(
+        *keys, t.alias("_t"), x.alias("_x")
+    )
+    a, b = base.alias("a"), base.alias("b")
+    cond = None
+    for g in keys:
+        c = F.col(f"a.{g}").eqNullSafe(F.col(f"b.{g}"))
+        cond = c if cond is None else cond & c
+    cond = cond & (F.col("a._t") < F.col("b._t"))
+    slopes = a.join(b, cond).select(
+        *[F.col(f"a.{g}") for g in keys],
+        ((F.col("b._x") - F.col("a._x")) / (F.col("b._t") - F.col("a._t"))).alias("_s"),
+    )
+    med = slopes.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.percentile("_s", F.lit(0.5)).alias("_slope"),
+    )
+    for g in keys:
+        med = med.withColumnRenamed(g, f"_m_{g}")
+    jcond = None
+    for g in keys:
+        c = F.col(g).eqNullSafe(F.col(f"_m_{g}"))
+        jcond = c if jcond is None else jcond & c
+    joined = base.join(F.broadcast(med), jcond, "left").drop(
+        *[f"_m_{g}" for g in keys]
+    )
+    return joined.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_obs"),
+        F.coalesce(F.first("n_pairs"), F.lit(0)).alias("n_pairs"),
+        round4(F.first("_slope")).alias("sen_slope"),
+        round4(
+            F.percentile(F.col("_x") - F.col("_slope") * F.col("_t"), F.lit(0.5))
+        ).alias("sen_intercept"),
+    )
+
+
 def test_theil_sen_matches_join_formulation(spark):
-    """Optimization r11 regression pin: the grouped-map rewrite must
-    reproduce the original self-join + F.percentile formulation
-    value-for-value (bitwise on the rounded outputs — what the driver
-    hashes) on a seeded random multi-series fixture with duplicate
-    timestamps, negative values, and a single-observation series.
-    The full-fixture A/B at every SF lives in scripts/theil_ab.py."""
+    """The operator must reproduce its former self-join +
+    F.percentile formulation value-for-value (bitwise on the rounded
+    outputs, which the oracle hashes) on a seeded random multi-series
+    fixture with duplicate timestamps, negative values, and a
+    single-observation series."""
     import random
     import struct as _struct
-
-    from scripts.theil_ab import old_theil
 
     rng = random.Random(76)
     rows = []
