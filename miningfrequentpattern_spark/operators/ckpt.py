@@ -17,6 +17,18 @@ whether the block returned or raised, except the handle passed to
 `keep`. Each loop still decides when a generation retires; the scope
 only owns how long storage lives.
 
+A loop that stops on a count reads it from its own pin: `s.pin(df,
+name=aggregate)` computes the named aggregates inside the pin's own
+job (`functions/telemetry.observed`) and returns them with the
+handle, so deciding to stop costs no second action:
+
+    cur, seen = s.pin(step(cur), n=F.count(F.lit(1)))
+    if seen["n"] == 0:
+        ...
+
+Count with `count(when(cond, 1))`, never `sum`: an empty round then
+reads 0, not NULL.
+
 Every loop must truncate lineage per round: a cache-only loop doubles
 the ANALYZED plan every round and Catalyst planning itself goes
 exponential (measured, see dedup.connected_components). HOW it
@@ -41,9 +53,11 @@ truncates is a fault-tolerance choice the caller owns:
 from __future__ import annotations
 
 import tempfile
-from typing import Callable
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+
+from ..functions.telemetry import observed
 
 
 def pin(df: DataFrame, durable: bool = False) -> DataFrame:
@@ -106,10 +120,21 @@ class Scope:
         df = df.cache()
         return self._hold(df, df.unpersist)
 
-    def pin(self, df: DataFrame) -> DataFrame:
-        """Pin one generation (module `pin`, in this scope's mode)."""
+    def pin(
+        self, df: DataFrame, **metrics: Column
+    ) -> DataFrame | tuple[DataFrame, dict[str, Any]]:
+        """Pin one generation (module `pin`, in this scope's mode).
+
+        With `metrics` (name=aggregate Column over `df`'s rows), return
+        (handle, {name: value}) instead, the values observed on the
+        pin's own job; see the module docstring."""
+        if metrics:
+            df, obs = observed(
+                df, "ckpt_pin", *(c.alias(n) for n, c in metrics.items())
+            )
         df = pin(df, self.durable)
-        return self._hold(df, lambda: release(df, self.durable))
+        self._hold(df, lambda: release(df, self.durable))
+        return (df, obs.get) if metrics else df
 
     def release(self, *dfs: DataFrame) -> None:
         """Free these handles now."""

@@ -984,28 +984,33 @@ def connected_components(
             )
         )
         for _ in range(max_iter):
-            # propagate: my new label = min(my label, neighbors' labels)
-            prop = s.pin(
+            # propagate: my new label = min(my label, neighbors' labels);
+            # the same aggregate keeps my old label (_self rows), so the
+            # round's own pin counts the changed nodes — a node without
+            # an old label counts as changed
+            prop, seen = s.pin(
                 sym.join(labels, sym.src == labels.doc_id)
-                .select(F.col("dst").alias("doc_id"), "component")
-                .union(labels)
+                .select(F.col("dst").alias("doc_id"), "component", F.lit(False))
+                .union(labels.select("doc_id", "component", F.lit(True)))
+                .toDF("doc_id", "component", "_self")
                 .groupBy("doc_id")
-                .agg(F.min("component").alias("component"))
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min(F.when(F.col("_self"), F.col("component"))).alias("_old"),
+                ),
+                changed=F.count(
+                    F.when(~F.col("component").eqNullSafe(F.col("_old")), 1)
+                ),
             )
-            converged = (
-                prop.join(
-                    labels.withColumnRenamed("component", "_old"), "doc_id"
-                )
-                .filter(F.col("component") != F.col("_old"))
-                .isEmpty()
-            )
-            # The old generation's pinned blocks are dead once the
-            # convergence probe has read them — free them now (the
-            # loop would otherwise accumulate diameter × |V| blocks).
+            # The old generation's pinned blocks are dead once the next
+            # one is pinned — free them now (the loop would otherwise
+            # accumulate diameter × |V| blocks).
             s.release(labels)
             labels = prop
-            if converged:
-                return s.keep(labels)
+            if seen["changed"] == 0:
+                # pinned without _old: the caller gets one pinned
+                # handle it can release
+                return s.keep(s.pin(labels.select("doc_id", "component")))
         # Partial propagation is WRONG labels, not slow labels — a
         # component wider than max_iter hops would silently split.
         raise RuntimeError(

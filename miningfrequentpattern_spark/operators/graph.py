@@ -332,51 +332,31 @@ def kcore(
     lineage for the same measured reason as the CC loops: a
     cache-only loop re-analyzes a plan that doubles every round;
     durable=True swaps it for the reliable-checkpoint form
-    (operators/ckpt.py). The degree relation is pinned BEFORE the
-    convergence count, so each round runs the |E|-stub degree
-    aggregate once: the survivor count, both semi-join build sides
-    and the fixpoint result all read the pinned (v, deg) rows.
+    (operators/ckpt.py). The survivor count is observed on the
+    degree relation's own pin, so each round runs the |E|-stub degree
+    aggregate once and no separate count: both semi-join build sides
+    and the fixpoint result read the pinned (v, deg) rows.
     """
     with ckpt.Scope(durable) as s:
         e = s.pin(_undirected(edges, src, dst))
         prev_nodes: int | None = None
         for _ in range(max_iter):
-            dgs = s.pin(_degrees(e))
+            dgs, seen = s.pin(
+                _degrees(e), n=F.count(F.when(F.col("deg") >= k, 1))
+            )
             keep = dgs.filter(F.col("deg") >= k).select("v")
-            n = keep.count()
-            if n == 0:
-                # Build the empty result from an explicit schema, NOT
-                # from e: e's blocks are about to be released and a
-                # lineage into a released checkpoint cannot recompute.
-                # id inherits the input's node type (cf. the r4 advice
-                # on _empty_topk_result's per-side typing).
-                from pyspark.sql import types as ST
-
-                id_type = e.schema["s"].dataType
-                return e.sparkSession.createDataFrame(
-                    [],
-                    ST.StructType(
-                        [
-                            ST.StructField("id", id_type),
-                            ST.StructField("core_degree", ST.LongType()),
-                        ]
-                    ),
-                )
-            if n == prev_nodes:
-                # No node fell below k this round — fixpoint reached
-                # (count equality forces keep == last round's keep ⊇
-                # nodes(e) ⊇ keep, so every node of e has deg >= k and
-                # the unfiltered projection below IS the core). Pin
-                # the (core-sized) result: the pins it derives from
+            n = seen["n"]
+            if n in (0, prev_nodes):
+                # No node is left, or none fell below k this round —
+                # fixpoint reached (count equality forces keep == last
+                # round's keep ⊇ nodes(e) ⊇ keep, so every node of e has
+                # deg >= k and the unfiltered projection IS the core).
+                # Pin the (core-sized) result: the pins it derives from
                 # are released on leaving the scope.
-                return s.keep(
-                    s.pin(
-                        dgs.select(
-                            F.col("v").alias("id"),
-                            F.col("deg").alias("core_degree"),
-                        )
-                    )
+                core = dgs.select(
+                    F.col("v").alias("id"), F.col("deg").alias("core_degree")
                 )
+                return s.keep(s.pin(core if n else core.limit(0)))
             prev_nodes = n
             nxt = s.pin(
                 e.join(keep.withColumnRenamed("v", "s"), "s", "semi")
@@ -426,8 +406,8 @@ def khop_distances(
     exchange, same rationale as pagerank's contribs cache), then one
     distinct on the discovered ids and one anti join against the
     visited union (all prior pinned legs — id-keyed, reusing the
-    distinct's hashing). Per-hop driver traffic is a single isEmpty
-    probe on an already-materialized pin, never node data. The final
+    distinct's hashing). Per-hop driver traffic is the frontier size,
+    observed on the frontier's own pin, never node data. The final
     (≤|V|-row) result is pinned before the per-hop legs are released
     — callers get a handle whose storage does not dangle into freed
     blocks; durable=True swaps every pin for a reliable checkpoint
@@ -444,21 +424,23 @@ def khop_distances(
             .filter(F.col("_src").isNotNull() & F.col("_dst").isNotNull())
             .repartition("_src")
         )
-        frontier = s.pin(
+        frontier, seen = s.pin(
             sources.select(F.col(id_col).alias("id"))
             .filter(F.col("id").isNotNull())
-            .distinct()
+            .distinct(),
+            n=F.count(F.lit(1)),
         )
         out_legs = [frontier.select("id", F.lit(0).alias("dist"))]
         visited = frontier
         for h in range(1, max_hops + 1):
-            if frontier.isEmpty():
+            if seen["n"] == 0:
                 break
-            frontier = s.pin(
+            frontier, seen = s.pin(
                 e.join(frontier.withColumnRenamed("id", "_src"), "_src")
                 .select(F.col("_dst").alias("id"))
                 .distinct()
-                .join(visited, "id", "anti")
+                .join(visited, "id", "anti"),
+                n=F.count(F.lit(1)),
             )
             out_legs.append(frontier.select("id", F.lit(h).alias("dist")))
             visited = visited.unionByName(frontier)
@@ -507,7 +489,7 @@ def sssp_distances(
     cheaper entries only, so the frontier shrinks to ∅ on
     convergence and each round's plan starts from pinned LogicalRDDs
     (no O(rounds²) lineage re-derivation). Per-round driver traffic
-    is one isEmpty probe.
+    is the frontier size, observed on the frontier's own pin.
     """
     with ckpt.Scope(durable) as s:
         e = s.cache(
@@ -523,18 +505,19 @@ def sssp_distances(
             )
             .repartition("_src")
         )
-        dist = s.pin(
+        dist, seen = s.pin(
             # a NULL id is not a node (the khop_distances stance —
             # r10 sweep): without the filter a NULL seed emits a
             # spurious (NULL, 0.0) output row
             sources.select(F.col(id_col).alias("id"))
             .filter(F.col("id").isNotNull())
             .distinct()
-            .select("id", F.lit(0.0).alias("dist"))
+            .select("id", F.lit(0.0).alias("dist")),
+            n=F.count(F.lit(1)),
         )
         frontier = dist
         for _ in range(max_rounds):
-            if frontier.isEmpty():
+            if seen["n"] == 0:
                 break
             cand = (
                 e.join(frontier.withColumnRenamed("id", "_src"), "_src")
@@ -545,12 +528,13 @@ def sssp_distances(
                 .groupBy("id")
                 .agg(F.min("_nd").alias("_nd"))
             )
-            improved = s.pin(
+            improved, seen = s.pin(
                 cand.join(dist.withColumnRenamed("dist", "_cur"), "id", "left")
                 .filter(
                     F.col("_cur").isNull() | (F.col("_nd") < F.col("_cur"))
                 )
-                .select("id", F.col("_nd").alias("dist"))
+                .select("id", F.col("_nd").alias("dist")),
+                n=F.count(F.lit(1)),
             )
             nxt = s.pin(
                 dist.join(improved, "id", "anti").unionByName(improved)
@@ -558,7 +542,7 @@ def sssp_distances(
             # The superseded dist and frontier have no reader left.
             s.release(dist, frontier)
             dist, frontier = nxt, improved
-        if require_converged and not frontier.isEmpty():
+        if require_converged and seen["n"] > 0:
             raise RuntimeError(
                 f"sssp_distances: still improving after {max_rounds} "
                 "rounds — raise max_rounds (or a negative cycle exists); "
@@ -678,10 +662,10 @@ def ktruss(
     rather than returning a too-large pseudo-truss (the kcore/CC
     stance), and per-round lineage pinning + release follow kcore
     exactly (durable=True for the reliable-checkpoint form). The
-    filtered (s, d, support) relation is pinned BEFORE the
-    convergence count, so each round runs the triangle enumeration —
-    the round's dominant cost — once: the count, the fixpoint return
-    and the next round's edge view all read that one pin.
+    surviving-edge count is observed on the filtered (s, d, support)
+    relation's own pin, so each round runs the triangle enumeration —
+    the round's dominant cost — once and no separate count: the
+    fixpoint return and the next round's edge view read that pin.
     """
     need = k - 2
     with ckpt.Scope(durable) as s:
@@ -689,7 +673,7 @@ def ktruss(
         prev: int | None = None
         for _ in range(max_iter):
             sup = _edge_support(e)
-            keep = s.pin(
+            keep, seen = s.pin(
                 e.join(sup, ["s", "d"], "left")
                 .select(
                     "s",
@@ -698,28 +682,15 @@ def ktruss(
                         "support"
                     ),
                 )
-                .filter(F.col("support") >= need)
+                .filter(F.col("support") >= need),
+                n=F.count(F.lit(1)),
             )
-            n = keep.count()
-            if n == 0:
-                from pyspark.sql import types as ST
-
-                id_type = e.schema["s"].dataType
-                return e.sparkSession.createDataFrame(
-                    [],
-                    ST.StructType(
-                        [
-                            ST.StructField("s", id_type),
-                            ST.StructField("d", id_type),
-                            ST.StructField("support", ST.LongType()),
-                        ]
-                    ),
-                )
-            if n == prev:
-                # no edge fell below k−2 this round — fixpoint; the
-                # support column was computed against this same edge
-                # set, so it is the within-truss support, and keep is
-                # already the pinned result.
+            n = seen["n"]
+            if n in (0, prev):
+                # nothing is left, or no edge fell below k−2 this round
+                # — fixpoint; the support column was computed against
+                # this same edge set, so it is the within-truss
+                # support, and keep is already the pinned result.
                 return s.keep(keep)
             prev = n
             # Next round reads the (s, d) view of the pinned keep —

@@ -58,337 +58,16 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver verifies at most the FIRST 50 registry entries per round
-# (observed: CORRECTNESS_r01.json / _r02.json held exactly
-# registration-order positions 1-50). The window ROTATES each round so
-# that, cumulatively, every registered query earns a driver row.
-#
-# Cumulative driver proof through round 3: 95/105 oracle-bearing
-# queries hash-proven, all 11 rows-only-by-design queries run-proven;
-# zero failures anywhere. Round 4's window therefore promotes the 30
-# queries with no driver row yet — the 10 round-3 additions (l02f,
-# l21–l24, m11, r34, r35, u05, u06) plus the 20 round-4 additions
-# (l02g guard-firing twin, r08b bucketed as-of, r36 salted join, m12
-# sequential rules, l25 curation pipeline, s10 compaction
-# round-trip, m13 co-purchase PageRank, l26 source KL drift, r37
-# snapshot diff, s11 binaryFile scan, m14 co-purchase triangles, l27
-# DSIR importance resampling, l28 n-gram novelty, s12 bucketed
-# co-located join, l29 embedding dim stats, u07 polymorphic UDTF,
-# r38 incremental agg refresh, m15 pair utility, r39 funnel, r40
-# cohort retention) — behind the 3 drift canaries, then 3
-# re-certification slots for operators whose code changed this round
-# (asof_join bucketing refactor → r08; cosine_topk_exact query-bound
-# guard → l03; guarded-Jaccard denominators → l02), and backfills
-# the remaining 14 slots with a cross-pack spread of
-# round-1/2-proven queries. 3+10+20+3+14 = 50 exactly
-# (tests/test_rotation.py asserts the window size mechanically).
-# Queries outside the window stay covered by the local oracle mirror
-# (tests/test_oracle_parity.py).
-#
-# ROUND 5 ROTATION (executed per the r4 verdict): through round 4,
-# every oracle-bearing query has a driver hash row (125/125) and
-# every rows-only query a run row — zero failures anywhere. This
-# round's window therefore: keeps the 3 canaries; RE-PROMOTES the
-# rows-only queries for a fresh run-proof (their last driver rows are
-# r3 — listed in ROWS_ONLY_REFRESH so tests/test_rotation.py can tell
-# a deliberate refresh from a wasted slot; l08 and l07b were
-# UPGRADED to full oracles this round, so they ride the same slots
-# as first hash-certifications instead); promotes the 8 round-5
-# additions (s13 schema-merge scan, m16 rule chains, l30 prefix
-# dedup, t07 stream-static enrich twin, m17 clustering coefficient,
-# l31 graded decontamination, l32 incremental dedup, s14 dynamic
-# partition overwrite); re-certifies the 6 queries
-# whose code or oracle text changed this round (m13 — pagerank
-# prelude/iteration rework; l28/l29 — dialect-pinning comments INSIDE
-# the oracle SQL the driver executes; l02e/l14 — connected_components'
-# per-round lineage truncation; m14 — triangle_counts factored
-# through the shared normalization seam); and backfills the
-# remaining 22
-# slots with the OLDEST-proven (round-1/2) queries across every pack.
-# 3+(9+2)+8+6+22 = 50 exactly (r16-r22 deferred to round 6 to make
-# room for the late round-5 additions and the l02e/l14/m14
-# re-certifications).
-#
-# ROUND 5 CONTINUATION (same round, later session, still before the
-# driver run): 14 more queries landed (r41-r47, l33/l34/l36-l38, m18,
-# s15), so 14 of the 22 backfill slots — all holding r1/r2 proofs —
-# were handed to them for first driver rows (then m19, l40 — the
-# second composed-pipeline flagship — r48 sketch re-aggregation, and
-# u08 table-argument UDTF displaced the r09/l04/m02/l05 backfills the
-# same way). 3+(9+2)+8+6+18+4 = 50.
-#
-# ROUND 6 ROTATION (executed): CORRECTNESS_r05 came back all green
-# (50/50 rows, 39 fresh hashes, zero failures ever), so the round-6
-# window promotes the staged backlog. 45 staged operators move from
-# their test files into @query registrations with their DuckDB
-# oracles VERBATIM (the test files keep the property/plan/edge tests
-# and now exercise the registered query): the relational/timeseries
-# family r51-r61, r63-r70 (minus r62), r72-r81; the graph family
-# m21-m26; the LLM family l42-l44, l46-l52. Plus three round-6
-# additions: l45_ivfpq_topk (IVF posting-list pruning x PQ 8-byte
-# ADC codes + exact rerank — the composed at-scale ANN tier the r5
-# verdict asked for; rows-only like every ANN variant, recall
-# floored vs exact in tests/test_llm.py), l38b_fuzzy_join_capped
-# (the l38 hot-block df-cap guard FIRING, l02g-style, with its own
-# oracle over the filtered universe), and r69 rides with its family.
-# l34_pq_topk and r48_hll_rollup_merge rotate OUT (both run-proven
-# r5; keeping them would be wasted slots — the tripwire that failed
-# at r5 HEAD now passes). ROWS_ONLY_REFRESH empties: every rows-only
-# query's run row is r5-fresh. 3 canaries + 29 relational + 6 graph
-# + 12 LLM = 50 exactly.
-#
-# ROUND 7 ROTATION (executed): CORRECTNESS_r06 came back 47 green +
-# 2 rows-only clean + ONE hash failure ever — l43_embedding_corr_
-# matrix, a +-0.0 sign-of-zero split (Spark +0.0 / DuckDB -0.0 at
-# cell (6,10)). Fixed this round with the PAIRED `round(...) + 0.0`
-# pin on both engines, swept across every signed rounded output
-# (functions/rounding.py), the local mirror's -0.0 fold REMOVED so
-# it can no longer mask the class, and l43 keeps its window slot for
-# the driver re-proof (it rides the round-6 promotion list? no — it
-# must re-prove, so it is pinned explicitly below). The window:
-# 3 canaries; the 9 staged promotions (r62 attribution, r71 feed
-# cadence, r82 Holt, r83 gap-fill interpolation, r84 SCD2 point-in-
-# time lookup, l53 TextRank keywords, l54 contamination attribution,
-# s16 MERGE upsert, m27 emerging pairs — oracles moved VERBATIM from
-# their test files); l03b_ann_lsh_topk on a ROWS_ONLY_REFRESH slot
-# (its r2 run-proof predates the round-6 native RP-LSH rewrite,
-# commit ff73778 — the driver has never run the code now behind the
-# name); l43 for the sign-fix re-proof; and 36 backfill slots with
-# the OLDEST driver proofs in TODO-order (a): the r1/r2-proven
-# s02-s09, r05b/r09-r22 families, l04-l09, m02.
-# 3 + 9 + 1 + 1 + 36 = 50 exactly. Deferred from list (a) to round
-# 8: t01-t05b, u03, then list (b) (l02f, l21-l24, m11, r34, r35,
-# u04-u06, r23-r28, r30-r32, l07, l07c).
-#
-# ROUND 8 ROTATION (executed): 3 canaries + the SEVENTEEN round-7
-# staged promotions (r85_retention_cohorts, r86_pit_features,
-# r87_ttl_dedup, r88_growth_accounting, r89_forecast_backtest,
-# r90_holt_winters, r91_trend_weekend_ols, s18/s19 corrupt-CSV/JSON
-# audits, l55_source_overlap, l56_truncated_recall,
-# l57_normalized_dedup, l58_gate_ablation, l59_media_dedup,
-# l60_embedding_drift, u09_iter_quantize, m28_part_communities —
-# oracles moved VERBATIM from their test files; l60's oracle is
-# GENERATED in llm_pack._l60_oracle, same seeded numpy projections
-# as the operator) + the THIRTY oldest-proof backfills: the r7
-# deferral of list (a) (m02_item_support, t01-t05b, u03), then all
-# of list (b) (l02f, l21-l24, m11, r34, r35, u04-u06, r23-r28,
-# r30-r32, l07, l07c). 3 + 17 + 30 = 50 exactly, zero spare.
-# ROWS_ONLY_REFRESH empties: every slot this round is oracle-bearing
-# (l03b got its post-rewrite run-proof in r7).
-#
-# ROUND 9 ROTATION (executed; CORRECTNESS_r08 came back 50/50 green,
-# zero errors — every round-8 promotion hash-proven first try):
-# window generated by `python scripts/plan_rotation.py` (no --promote
-# needed: the three round-9 registrations are never-proven, so the
-# limbo guard promotes them implicitly). 3 canaries + 3 promotions
-# (l61_bpe_merges / l62_bpe_encode — the round-8-certified unrolled-
-# CTE oracles moved from tests/test_bpe.py into queries/bpe_oracle.py
-# and generated at fixed n_merges on the registration, the l60
-# pattern; l04d_portable_fingerprints — l04c's md5-28bit mod-2^30
-# hash-oracle-able twin, the l59 engine-shared-digest pattern) + the
-# 44 oldest-proof backfills (the one r2 row l02d, all 16 r3 rows,
-# the first 27 r4 rows in registration order). The three promotions
-# displace exactly three r4 backfills to round 10. ONE post-script
-# hand edit: m28_part_communities re-enters the window (displacing
-# the youngest backfill, l25_curation_pipeline -> round 10) because
-# its operator code changed this round — the label_propagation
-# single-exchange round-body shave (bit-identical labeling proven by
-# the scripts/m28_ab.py parity run, in git history at 68d0a82, but
-# the re-certify rule is mechanical: changed code re-proves in the
-# driver env).
-#
-# ROUND 10 ROTATION (executed): CORRECTNESS_r09 came back 48/50 —
-# 47 hash-green + l44's by-design rows-only refresh — with ONE real
-# failure, l62_bpe_encode (values tuple-equal to the oracle; the
-# ARRAY<STRING> output broke the driver's pandas hash
-# canonicalization). Round 10 fixed l62's output shape (TAB-joined
-# string on both engines, the _itemset_str house rule; a complex-type
-# tripwire now lives in tests/oracle.py::compare) and spent the
-# window on re-proof + the booked consolidations/hardening, adding
-# ZERO new registrations (VERDICT r9 item 8).
-#
-# Window = 3 canaries + l62 (limbo-promoted: its r9 row never
-# run-proved) + 24 changed-code re-certifications + the full r4
-# remainder + 4 r5 rows, generated by
-#   python scripts/plan_rotation.py --promote <changed names>
-# The changed-code set (code, plan, or oracle TEXT changed in r10):
-#   l36 (doc_id mod 2^31 overflow fix, backlog (i));
-#   m18/m23/m25 (_copurchase_counted_pairs consolidation (a));
-#   m11/m16 (_token_pair_rules consolidation (b); m16 also moved to
-#   the oracle's exact ceil(0.45*N) arithmetic);
-#   m05_rules_1to1/m09_full/m12 (oracle CTE constants, (c));
-#   r49/r54/r60/r63/r64/r75 (NaN pins (d), r54 validation (e),
-#   round4 zero-sign pins + paired oracle '+ 0.0' (f));
-#   l12/l25/l31/l54 (BENCH_MOD) and l48/l49 (L48_QUERY_TERMS)
-#   oracle-constant interpolation (j);
-#   u05 (per-row ragged-length guard, ADVICE r9);
-#   m28 (label_propagation ckpt pin/release, ADVICE r9);
-#   s16 (nullability-normalized type-drift guard, ADVICE r9).
-# EXEMPT from re-cert (guard-only additions — a new fail-fast branch
-# before plan construction, plans and oracles byte-identical):
-# r08/r08b/r26/r36/r67/r73/l20/l50 pick up the (h) collision guards
-# but compute the identical plan; r08/r08b/r36 re-prove anyway as r4
-# backfills. Displacement cost: the r5 cohort beyond m13/m14/m17/m19
-# slips to round 11 — oldest remaining proof after this round is r5.
-#
-# ROUND 11 ROTATION (executed): CORRECTNESS_r10 came back 50/50 with
-# zero errors. Window generated by
-#   python scripts/plan_rotation.py --promote s18_corrupt_csv_audit \
-#     s19_corrupt_json_audit l59_media_dedup
-# = 3 canaries + the 3 booked changed-code re-certs ((k) one
-# parameterized corrupt-audit body; (l) media_dedup single
-# Exchange+Sort+Window via a NAMED null-salt column — the inline salt
-# expression was re-aliased per window spec and planned TWO shuffles)
-# + the full 40-row r5 remainder + 4 r6 rows. Displacement cost: the
-# 3 youngest r6 backfills (r52/r53/r55) slip to round 12.
-# Three in-window backfills additionally changed code AND oracle
-# this round (the VERDICT r10 rows-only burn-down, items 4-5, plus
-# the same trick applied once more), so their slots double as
-# changed-code re-certs:
-#   l02c: xxhash64 simhash64 -> simhash_portable_pairs (28-bit
-#     md5-28bit frequency-vote fingerprints, hamming<=3, the l02b
-#     engine-shared-integer trick; banding lossless by pigeonhole so
-#     the all-pairs oracle is exact) — moves OFF the rows-only list
-#     with a full value-hash oracle, certified against DuckDB at
-#     sf0.01 in-session. The 64-bit xxhash tier stays the library
-#     operator (banded-equals-all-pairs-tested).
-#   l02b: MLlib MinHashLSH -> minhash_portable_pairs (28-bit md5
-#     shingle hashes + fixed affine permutations mod 2^31-1, the
-#     l04d engine-shared-integer trick; coefficients interpolated
-#     into the oracle text) — moves OFF the rows-only list with a
-#     full value-hash oracle; banding is output-lossless by the
-#     >=1-agreeing-component argument, so the oracle is all-pairs.
-#     The MLlib variant stays the library operator, recall-tested.
-#   l03c: KMeans IVF -> ivf_topk_portable (n_clusters lowest-id
-#     corpus vectors as fixed seed points; assignment/probing are
-#     row-local L2 argmins both engines compute identically) — moves
-#     OFF the rows-only list; the KMeans form stays the quality
-#     tier, recall-tested.
-#
-# ROUND 12 BOOKED (from the r11 functions sweep — each changes
-# registered-query semantics and the r11 window is committed):
-# (m) u09/int8_roundtrip_error_iter: a stored IEEE NaN ELEMENT (not
-#     NULL — parquet distinguishes them, but Arrow->pandas collapses
-#     both to np.nan) is skipped by the np.isnan filter while the
-#     DuckDB oracle's list_max orders NaN above every float → scale
-#     diverges NaN vs finite. Fixture has no NaN elements today; pin
-#     one semantics (propagate NaN like the oracle, or filter in the
-#     oracle too) and re-certify u09.
-#     DECISION (round 11): pin = RAISE on NaN/NULL elements, the
-#     embeddings.py::_moment_partials partial-result-is-wrong-result
-#     stance (a NaN inside a stored embedding is corrupt data; both
-#     propagate-NaN and filter-NaN silently compute over it). Oracle
-#     text unchanged (fixture is NaN-free); the kernel body changes,
-#     so u09 re-certifies mechanically in its r12 slot.
-# (n) zorder.spread16 silently truncates inputs to 16 bits and
-#     s09_zorder_key already feeds it hour ≈ 490k (19 bits) and
-#     unbounded user_id — values 65536 apart interleave identically,
-#     quietly weakening file-level min/max pruning (both engines
-#     agree, so no hash ever fails). Rank- or range-bucket each
-#     dimension into 16 bits inside the operator (and the oracle),
-#     then re-certify s09.
-#     STAGED + LOCALLY CERTIFIED round 11: functions/zorder.py::
-#     bucket16 / bucket16_sql / morton2_bucketed (floor-of-double
-#     bucketing from broadcast data bounds — monotone, full 16-bit
-#     surjection, clamped stragglers) with the full r12 s09 shape
-#     oracle-parity-tested in tests/test_zorder_bucketed_staged.py;
-#     the promotion swaps the s09 body + oracle to the staged forms.
-# (o) l03b rows-only burn-down (the l02b/l02c/l03c trick, round-11
-#     analysis): since the r6 native rewrite, ann_lsh_topk's
-#     randomness is a deterministic function of seed 42 — the
-#     projection directions are numpy-seeded LITERAL arrays, bucket
-#     bits are signs of sequential-fold dot products (the l60
-#     list_reduce bit-parity argument), and candidate gen + rerank
-#     are deterministic joins/ranks. An oracle generated with the
-#     baked projection literals (the _l60_oracle pattern) should
-#     certify the full RP-LSH pipeline value-for-value; round the
-#     dot to 6dp + 0.0 before the sign test (the l60 edge stance) so
-#     a near-zero projection can't flip a bucket bit cross-engine.
-#     l03b is NOT in the r11 window, so this books for an r12 slot.
-#     STAGED + LOCALLY CERTIFIED round 11 (the r5-r7 staging flow):
-#     tests/test_ann_lsh_oracle_staged.py::ann_lsh_oracle_sql
-#     hash-matches ann_lsh_topk over DOUBLE-CAST fixture embeddings
-#     at sf0.01 with NO rounding needed — sequential-fold bit parity
-#     holds end-to-end (norm, normalize, bucket floor, rerank). The
-#     one registered-code change the promotion needs is the
-#     `.cast("array<double>")` at the l03b query boundary (float32
-#     products in Spark's fold have no portable SQL twin); move the
-#     generator verbatim into llm_pack on promotion.
-# Fixed in-round from the same sweep (guard/doc class, plans
-# unchanged): key_skew_profile gains the sibling collision guard;
-# compact_parquet's return documented as a planned upper bound;
-# duration_us documented as relative microseconds; similarity.py's
-# six inlined `F.round(...,4)+F.lit(0.0)` copies now call
-# functions/rounding.round4 (bit-identical expression).
-#
-# ROUND 11 QUERIES-PACK SWEEP (the r10 VERDICT item 6 target — the
-# least-recently-swept module family after the functions sweep
-# above): full line-by-line review of streaming_pack (257),
-# sources_pack (1164), mining_pack (1846), llm_pack (3653), and
-# relational_pack (4532) this round. ZERO new findings — every
-# risky seam checked (NULL/NaN divide parity, sign-of-zero,
-# rounding-boundary FP, tie determinism, broadcast orientation,
-# degenerate inputs, skew posture) already carries a documented pin
-# from the r5-r10 sweeps. The same pass re-read the r9-cohort
-# operator interiors (operators/text.py, mining.py, relational.py,
-# embeddings.py): also zero findings. With functions/ swept earlier
-# this round and dedup/similarity/graph/timeseries/streaming/
-# sources/multimodal swept in r10, every module has now had a
-# full-file review within the last two rounds — sweep yield has
-# reached diminishing returns; keep the cadence but expect
-# guard/doc-class findings only.
-#
-# ROUND 12 ROTATION — DONE (this round): re-ran
-# `python scripts/plan_rotation.py --promote u09_iter_quantize
-# s09_zorder_key l03b_ann_lsh_topk` against the real CORRECTNESS_r11
-# and pasted its window below verbatim — all three booked (m)/(n)/(o)
-# re-certs LANDED. The window: 3 canaries + 3 promotions + the full
-# 30-row r6 cohort (r52..r81/r69, l38b/l42/l46/l47/l50/l51/l52, l45)
-# + the first 14 r7 rows; each --promote
-# displaces one youngest r7 backfill. l45_ivfpq_topk is rows-only by
-# design and must move onto the r12 ROWS_ONLY_REFRESH list (with
-# l03b too if its (o) oracle upgrade does NOT land — if it does,
-# its slot is the re-cert). Keep the canaries; guard-only additions
-# exempt per the r10 precedent. Stage new oracle-bearing
-# registrations sparingly.
-#
-# Backlog state after r10: consolidations (a)-(c) and hardening
-# (d)-(j) from the r9 sweeps are LANDED (see the r10 commits);
-# protobuf re-probed ABSENT (the TWS twin stays an env skip).
-#
-# ROUND 11 BOOKED (from the r10 sources/multimodal review sweep —
-# deferred because each changes registered-query code and the r10
-# window is committed):
-# (k) collapse s18_corrupt_csv_audit / s19_corrupt_json_audit's
-#     near-identical 25-line bodies into one parameterized helper
-#     (writer_fn, reader_fn, modulus, tag) — both re-certify;
-# (l) media_dedup: compute the per-group count over the SAME ordered
-#     window spec as the row_number (explicit unbounded frame)
-#     instead of a second unordered spec — one Window pass instead
-#     of two over the same partition keys; l59 re-certifies.
-# Fixed in-round from the same sweep (guard-class or in-window):
-# jsonl_sink manifests name-scoped via .option('name') (two writers
-# sharing a path clobbered each other's batch manifests and the
-# loser's vacuum deleted its committed files); BINARY columns land
-# base64 not bytearray-repr; synthetic_txns rejects non-positive
-# sizing options; u05 imports pyarrow.compute explicitly; s06/s10
-# read back with the writer's schema (empty-slice
-# UNABLE_TO_INFER_SCHEMA).
-# ROWS_ONLY_REFRESH, round 11: the r5-cohort backfill slots include
-# seven queries that are rows-only BY DESIGN (randomized sketches /
-# MLlib-randomized ANN tiers / the xxhash fingerprint twin) — their
-# re-promotion is the deliberate oldest-proof refresh the round-5
-# policy allows, declared here so tests/test_rotation.py can tell it
-# from an accidental wasted slot. (l02b/l02c/l03c would have been on
-# this list too, but their round-11 oracle upgrades made those slots
-# oracle-bearing instead — the better outcome.)
-# ROWS_ONLY_REFRESH, round 12: exactly one slot — l45_ivfpq_topk is
-# rows-only BY DESIGN (MLlib-KMeans-randomized ANN tier, recall-floor
-# tested) and lands on an r6-cohort backfill slot. l03b would have
-# been here too, but its booked (o) oracle upgrade LANDED this round
-# (the generated RP-LSH SQL is now the registered oracle), so its
-# slot is the re-cert — the better outcome, same as l02b/l02c/l03c
-# in r11.
+# The driver verifies only the FIRST 50 registry entries each round,
+# so PRIORITY is that window: the 3 canaries, then promotions (new or
+# changed-code queries, which must re-prove in the driver), then the
+# oldest-proven queries. `python scripts/plan_rotation.py [--promote
+# NAME ...]` prints the next window from the recorded
+# CORRECTNESS_r*.json, and tests/test_rotation.py enforces it. A
+# rows-only query takes a slot only as a deliberate re-run listed in
+# ROWS_ONLY_REFRESH. Queries outside the window stay covered by the
+# local oracle mirror (tests/test_oracle_parity.py). Each rotation's
+# reasons go in CHANGES.md, not here.
 ROWS_ONLY_REFRESH: frozenset[str] = frozenset(
     {
         "l45_ivfpq_topk",
@@ -399,9 +78,9 @@ PRIORITY: tuple[str, ...] = (
     "m01_basketize_orders",
     "r01_filter_project",
     "l01_exact_dedup",
-    "u09_iter_quantize",  # promote (booked (m): NaN/NULL-element RAISE pin)
-    "s09_zorder_key",  # promote (booked (n): range-bucketed z-order)
-    "l03b_ann_lsh_topk",  # promote (booked (o): generated RP-LSH oracle)
+    "u09_iter_quantize",  # promote
+    "s09_zorder_key",  # promote
+    "l03b_ann_lsh_topk",  # promote
     "r52_ewma_daily_revenue",  # last proof r6
     "r53_skew_advisor",  # last proof r6
     "r55_activity_spans",  # last proof r6
@@ -430,7 +109,7 @@ PRIORITY: tuple[str, ...] = (
     "l50_zipf_fit",  # last proof r6
     "l51_label_centroids",  # last proof r6
     "l52_bigram_backoff",  # last proof r6
-    "l45_ivfpq_topk",  # last proof r6 (rows-only refresh — see list above)
+    "l45_ivfpq_topk",  # last proof r6
     "m27_emerging_pairs",  # last proof r7
     "r05b_parts_with_bulk_orders",  # last proof r7
     "r09_distinct_aggregates",  # last proof r7
@@ -447,7 +126,6 @@ PRIORITY: tuple[str, ...] = (
     "r19_math_functions",  # last proof r7
     "r20_array_functions",  # last proof r7
 )
-
 
 
 def _reorder() -> None:

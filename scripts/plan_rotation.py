@@ -11,7 +11,7 @@ Usage:
     python scripts/plan_rotation.py --promote a b   # promotions first
 
 The output is the HANDOFF, not the commit: paste into
-queries/registry.py, update the ROUND N ROTATION comment, and run
+queries/registry.py, record the rotation in CHANGES.md, and run
 tests/test_rotation.py — its invariants (window fits, all
 oracle-bearing or refresh-listed, no limbo) stay the enforcement.
 """

@@ -610,10 +610,12 @@ def _persistent_ids(spark):
     "op", ["connected_components", "connected_components_star"]
 )
 def test_cc_loops_free_storage_when_probe_raises(spark, monkeypatch, op):
-    """A convergence probe that raises must not leave the loop's
+    """A convergence read that raises must not leave the loop's
     caches or pinned generations behind: no persistent RDD is added.
     (Compared by id: an earlier test's RDD may be collected
     meanwhile.)"""
+    from pyspark.sql import Observation
+
     from miningfrequentpattern_spark.operators import dedup
 
     chain = spark.createDataFrame(
@@ -624,9 +626,15 @@ def test_cc_loops_free_storage_when_probe_raises(spark, monkeypatch, op):
     def boom(self):
         raise RuntimeError("probe failed")
 
-    # the classic DataFrame subclass; patching pyspark.sql.DataFrame
-    # would not reach it
-    monkeypatch.setattr(type(chain), "isEmpty", boom)
+    if op == "connected_components":
+        # label propagation reads its stopping count from the
+        # Observation on the round's pin, after that pin is taken
+        monkeypatch.setattr(Observation, "get", property(boom))
+    else:
+        # the star form still probes with isEmpty (on the classic
+        # DataFrame subclass; patching pyspark.sql.DataFrame would
+        # not reach it)
+        monkeypatch.setattr(type(chain), "isEmpty", boom)
     with pytest.raises(RuntimeError, match="probe failed"):
         getattr(dedup, op)(chain)
     monkeypatch.undo()

@@ -376,17 +376,20 @@ def test_kcore_raises_instead_of_returning_partial_peel(spark):
         kcore(df, k=2, max_iter=1)
 
 
-def test_durable_checkpoint_mode_matches_local(spark):
+def test_durable_checkpoint_mode_matches_local(spark, monkeypatch):
     """operators/ckpt.py durable=True (reliable checkpoint — the
     executor-loss-recoverable path the r4 advice asked for) must be a
     pure fault-tolerance choice: identical results to the default
-    local pin for every iterative operator that takes it."""
+    local pin for every iterative operator that takes it, and the
+    same counts observed on the pins of the loops that stop on one."""
+    from miningfrequentpattern_spark.operators import ckpt
     from miningfrequentpattern_spark.operators.dedup import (
         connected_components,
         connected_components_star,
     )
     from miningfrequentpattern_spark.operators.graph import (
         kcore,
+        khop_distances,
         ktruss,
         pagerank,
         personalized_pagerank,
@@ -412,6 +415,16 @@ def test_durable_checkpoint_mode_matches_local(spark):
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
+    seen = []
+    real_pin = ckpt.Scope.pin
+
+    def pin(self, df, **metrics):
+        out = real_pin(self, df, **metrics)
+        if metrics:
+            seen.append(out[1])
+        return out
+
+    monkeypatch.setattr(ckpt.Scope, "pin", pin)
     for fn in (
         lambda d: connected_components(edges, durable=d),
         lambda d: connected_components_star(edges, durable=d),
@@ -419,12 +432,18 @@ def test_durable_checkpoint_mode_matches_local(spark):
         lambda d: ktruss(g, k=3, durable=d),
         lambda d: pagerank(g, iterations=3, durable=d),
         lambda d: personalized_pagerank(g, seeds, iterations=3, durable=d),
+        lambda d: khop_distances(g, seeds, max_hops=4, durable=d),
         lambda d: sssp_distances(wg, seeds, max_rounds=4, durable=d),
         lambda d: apriori_frequent_itemsets(
             baskets, min_support=0.5, durable=d
         ),
     ):
-        assert rows(fn(False)) == rows(fn(True))
+        seen.clear()
+        local = rows(fn(False))
+        local_seen = list(seen)
+        seen.clear()
+        assert rows(fn(True)) == local
+        assert seen == local_seen
 
 
 @given(

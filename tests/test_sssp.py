@@ -143,9 +143,9 @@ def test_sssp_null_seed_is_not_a_node(spark):
 
 def test_sssp_frees_superseded_generations(spark, monkeypatch):
     """Each round retires the dist and frontier it replaced: on a
-    9-edge path the storage held at every frontier probe stays at
-    the cached edges plus one dist and one frontier, however many
-    rounds have run."""
+    9-edge path the storage held when each round's frontier is pinned
+    stays at the cached edges plus one dist and one frontier, however
+    many rounds have run."""
     from miningfrequentpattern_spark.operators import ckpt
 
     edges = spark.createDataFrame(
@@ -157,16 +157,19 @@ def test_sssp_frees_superseded_generations(spark, monkeypatch):
     # new persistent RDDs by id: an earlier test's may be collected
     base = set(jsc.getPersistentRDDs().keys())
     held = []
-    real_is_empty = type(edges).isEmpty
+    real_pin = ckpt.Scope.pin
 
-    def probe(self):
-        held.append(len(set(jsc.getPersistentRDDs().keys()) - base))
-        return real_is_empty(self)
+    def pin(self, df, **metrics):
+        # the frontier pins are the ones that observe a count: the
+        # seed frontier, then one per round
+        if metrics:
+            held.append(len(set(jsc.getPersistentRDDs().keys()) - base))
+        return real_pin(self, df, **metrics)
 
-    monkeypatch.setattr(type(edges), "isEmpty", probe)
+    monkeypatch.setattr(ckpt.Scope, "pin", pin)
     out = sssp_distances(edges, seeds, max_rounds=8)
     monkeypatch.undo()
-    assert len(held) == 8, held
+    assert len(held) == 1 + 8, held
     assert max(held) <= 3, held
     assert {r["id"]: r["dist"] for r in out.collect()} == {
         i: float(i) for i in range(9)
