@@ -13,8 +13,9 @@ expressions must therefore be commutative/associative aggregates
 
 Batch: `df, obs = observed(df, "gate", ...); df.write...; obs.get`.
 The iterative operators use it through `operators/ckpt.Scope.pin`: a
-loop that stops on a count (connected components, k-core, k-truss,
-BFS, Bellman-Ford) observes that count on the round's own eager pin
+loop that stops on a count (both phases of connected components —
+label propagation and star contraction — k-core, k-truss, BFS,
+Bellman-Ford) observes that count on the round's own eager pin
 instead of running a second action.
 Streaming: the same `observe` call surfaces per-micro-batch metrics
 on StreamingQueryProgress.observedMetrics (same expressions, same

@@ -1,5 +1,7 @@
 """Storage for the iterative operators (connected components, k-core,
 k-truss, PageRank, BFS, Bellman-Ford, label propagation, Apriori, BPE).
+Connected components holds both its phases, label propagation and
+star contraction, in one scope.
 
 An iterative operator holds its storage in a `Scope`:
 
@@ -27,7 +29,11 @@ handle, so deciding to stop costs no second action:
         ...
 
 Count with `count(when(cond, 1))`, never `sum`: an empty round then
-reads 0, not NULL.
+reads 0, not NULL. The loops that stop this way: both phases of
+connected components, k-core, k-truss, BFS and Bellman-Ford. Observe
+the pinned rows themselves, not a relation nested inside their plan:
+a nested observation counts only the rows its consumer pulls (a
+sort-merge join stops reading one side when the other runs out).
 
 Every loop must truncate lineage per round: a cache-only loop doubles
 the ANALYZED plan every round and Catalyst planning itself goes

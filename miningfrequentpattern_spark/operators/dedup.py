@@ -936,16 +936,35 @@ def embedding_neardup_pairs(
     )
 
 
+# Label-propagation rounds run before what is left unsettled goes to
+# star contraction. Near-dup graphs are clique-like and settle within
+# them (perfbench corpus-dedup: 3 rounds on each of seeds 1-10).
+LP_ROUNDS = 4
+
+
 def connected_components(
-    edges: DataFrame, max_iter: int = 20, durable: bool = False
+    edges: DataFrame, max_iter: int = 50, durable: bool = False
 ) -> DataFrame:
-    """Cluster near-dup pairs into groups by smallest-id label
-    propagation (no GraphFrames dependency).
+    """Cluster near-dup pairs into groups (no GraphFrames dependency).
 
     edges: (doc_a, doc_b). Returns (doc_id, component) where component
-    is the minimum doc id reachable. Iterations are bounded by graph
-    diameter; near-dup graphs are overwhelmingly tiny cliques, so this
-    converges in 2-3 rounds. Each round: one groupBy shuffle.
+    is the minimum doc id reachable. Two phases:
+
+    1. Smallest-id label propagation, one groupBy shuffle a round, for
+       at most LP_ROUNDS rounds. It needs a round per hop of diameter,
+       and near-dup graphs (overwhelmingly tiny cliques) settle here;
+       the operator then returns.
+    2. Otherwise the edges are contracted to the graph of the labels
+       they join, and alternating large-star/small-star (Kiveris et
+       al., "Connected Components in MapReduce and Beyond", SoCC 2014)
+       finishes it in a number of rounds that grows with the log of
+       component size, not with diameter (a sorted 10⁴-node path
+       takes 14 star rounds). Each doc takes its label's star root.
+
+    max_iter bounds the star rounds. Running out RAISES: partial
+    labels would split a component, a wrong answer, not a slow one.
+    Both phases stop on counts observed in their rounds' own pin jobs,
+    so no probe action runs.
 
     durable=True swaps the per-round localCheckpoint for a RELIABLE
     checkpoint (operators/ckpt.py) — the executor-loss-recoverable
@@ -956,9 +975,9 @@ def connected_components(
     with ckpt.Scope(durable) as s:
         # Cache the symmetrized edge list: it is duplicated-pairs-sized
         # (tiny next to the corpus) but its LINEAGE is the full
-        # set-similarity join — without the cache every propagation
-        # iteration re-executes that join (measured: l02e paid the
-        # Jaccard plan once per round).
+        # set-similarity join — without the cache every round
+        # re-executes that join (measured: l02e paid the Jaccard plan
+        # once per round).
         sym = s.cache(
             fwd.union(
                 edges.select(
@@ -966,16 +985,16 @@ def connected_components(
                 )
             )
         )
-        # Per-round labels use localCheckpoint, NOT cache: each round's
-        # plan references the previous labels twice (propagate + union),
-        # so a cache-only loop doubles the analyzed logical plan every
-        # round and Catalyst analysis itself goes exponential — ~2^k
-        # plan nodes by round k, measured minutes of pure planning by
-        # round 16 on a 40-edge path (round-5 session). Truncating
-        # lineage keeps planning O(1) per round; the trade is the usual
-        # one (checkpointed partitions are not recomputable on executor
-        # loss — same documented trade as pagerank's result pin), paid
-        # on a |V|-sized relation for diameter-many rounds.
+        # Rounds pin (localCheckpoint), NOT cache: each round's plan
+        # references the previous state at least twice (propagate +
+        # union, or the two symmetrize unions), so a cache-only loop
+        # doubles the analyzed logical plan every round and Catalyst
+        # analysis itself goes exponential — ~2^k plan nodes by round
+        # k, measured minutes of pure planning by round 16 on a
+        # 40-edge path. Truncating lineage keeps planning O(1) per
+        # round; the trade is the usual one (checkpointed partitions
+        # are not recomputable on executor loss — same documented
+        # trade as pagerank's result pin).
         labels = s.pin(
             sym.groupBy(F.col("src").alias("doc_id"))
             .agg(F.min("dst").alias("component"))
@@ -983,7 +1002,7 @@ def connected_components(
                 "doc_id", F.least("component", "doc_id").alias("component")
             )
         )
-        for _ in range(max_iter):
+        for _ in range(LP_ROUNDS):
             # propagate: my new label = min(my label, neighbors' labels);
             # the same aggregate keeps my old label (_self rows), so the
             # round's own pin counts the changed nodes — a node without
@@ -1004,138 +1023,104 @@ def connected_components(
             )
             # The old generation's pinned blocks are dead once the next
             # one is pinned — free them now (the loop would otherwise
-            # accumulate diameter × |V| blocks).
+            # accumulate rounds × |V| blocks).
             s.release(labels)
             labels = prop
             if seen["changed"] == 0:
                 # pinned without _old: the caller gets one pinned
                 # handle it can release
                 return s.keep(s.pin(labels.select("doc_id", "component")))
-        # Partial propagation is WRONG labels, not slow labels — a
-        # component wider than max_iter hops would silently split.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "iterations; raise max_iter (graph diameter exceeds it), "
-            "or use connected_components_star (O(log n) rounds, "
-            "diameter-independent) for long-chain graphs"
-        )
-
-
-def connected_components_star(
-    edges: DataFrame, max_iter: int = 50, durable: bool = False
-) -> DataFrame:
-    """Connected components by ALTERNATING large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    ACM SoCC 2014) — the O(log n)-round escape hatch for the one
-    documented cliff in `connected_components`: label propagation
-    needs one round per hop of graph DIAMETER, so a long near-dup
-    CHAIN (page-1 ~ page-2 ~ ... ~ page-k, each adjacent pair just
-    over threshold) exhausts max_iter and raises. Star contraction's
-    round count depends only logarithmically on component SIZE, never
-    on diameter — a 10⁶-node path converges in ~20 rounds where label
-    propagation would need 10⁶.
-
-    Same contract as `connected_components`: edges (doc_a, doc_b) →
-    (doc_id, component = min reachable id); equivalence on every
-    graph shape is asserted in tests (vs the recursive-CTE-oracle-
-    certified operator). Per round: each star op is one groupBy
-    shuffle (neighborhood min) + one equi-join back — all hash-keyed
-    by node id, no driver data path; the edge relation strictly
-    shrinks toward the star fixpoint (every node pointing at its
-    component min), so late rounds are cheap. Convergence is checked
-    with a bounded isEmpty probe per round, and the default max_iter
-    of 50 covers components of ~2^25 nodes with margin — hitting it
-    still RAISES rather than returning split components.
-    durable=True uses reliable checkpoints per round instead of
-    local pins (operators/ckpt.py).
-    """
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        # m(u) = min over {u} ∪ neighbors(u); emitted edges connect
-        # the selected neighbors of u directly to m(u).
-        m = (
-            e.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("_mn", "u").alias("m"))
-        )
-        sel = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-        out = (
-            e.join(m, "u")
-            .filter(sel)
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        if not large:
-            # small-star also re-links u itself to its neighborhood
-            # min so the u → m chain survives the contraction.
-            out = out.union(
-                m.select(F.col("u").alias("a"), F.col("m").alias("b"))
+        labels = labels.select("doc_id", "component")
+        # The label graph: one edge (greatest, least) per pair of
+        # differing labels that some edge joins, read from the cached
+        # `sym` (`edges` would re-run the set-similarity join).
+        cur, seen = s.pin(
+            sym.join(labels.toDF("src", "_ls"), "src")
+            .join(labels.toDF("dst", "_ld"), "dst")
+            .where(F.col("_ls") != F.col("_ld"))
+            .select(
+                F.greatest("_ls", "_ld").alias("a"),
+                F.least("_ls", "_ld").alias("b"),
             )
-        return out.filter(F.col("a") != F.col("b")).distinct()
-
-    # Per-round lineage TRUNCATION, not caching: each round references
-    # the previous edge relation four times (two symmetrize unions),
-    # so a cache-only loop leaves an analyzed logical plan that grows
-    # ~4× per round — Catalyst analysis itself goes exponential (the
-    # pitfall measured at 2 min/round by round 3 on a 40-edge path).
-    # localCheckpoint(eager) pins each round's ~|E| rows and gives the
-    # next round an O(1)-size plan; with O(log n) rounds the usual
-    # executor-loss trade (same as pagerank's documented result pin)
-    # is bounded and acceptable for an operator whose convergence
-    # probe is eager anyway.
-    raw = edges.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    )
-    with ckpt.Scope(durable) as s:
-        cur = s.pin(raw.filter(F.col("a") != F.col("b")).distinct())
-        # Node set from the RAW edges, BEFORE the self-loop filter: a
-        # node whose only edge is a self-pair is still its own
-        # singleton component in connected_components' output, and
-        # the "Same contract" promise above includes it (self-review
-        # r5 — deriving nodes from `cur` silently dropped such nodes).
-        nodes = s.pin(
-            raw.select(F.col("a").alias("doc_id"))
-            .union(raw.select(F.col("b").alias("doc_id")))
-            .distinct()
+            .distinct(),
+            n=F.count(F.lit(1)),
         )
+        # empty: propagation settled in its last round
+        if seen["n"] == 0:
+            return s.keep(s.pin(labels))
         for _ in range(max_iter):
-            sym = cur.select(
-                F.col("a").alias("u"), F.col("b").alias("v")
-            ).union(cur.select(F.col("b").alias("u"), F.col("a").alias("v")))
-            after_large = star(sym, large=True)
-            sym2 = after_large.select(
-                F.col("a").alias("u"), F.col("b").alias("v")
-            ).union(
-                after_large.select(
-                    F.col("b").alias("u"), F.col("a").alias("v")
-                )
+            # counted on the round's output, which its pin reads in
+            # full (an observation nested at a join input counts only
+            # the rows the join pulls)
+            nxt, seen = s.pin(
+                _star(_star(cur, large=True), large=False),
+                unsettled=F.count(F.when(F.col("_unsettled"), 1)),
             )
-            nxt = s.pin(star(sym2, large=False))
-            # Fixpoint: the edge SET is unchanged (order-insensitive).
-            changed = not (
-                nxt.exceptAll(cur).isEmpty() and cur.exceptAll(nxt).isEmpty()
-            )
-            # Previous generation is dead after the fixpoint probe —
-            # free its pinned blocks (O(log n) rounds would otherwise
-            # stack that many |E|-sized block sets).
+            # cur is dead once its successor is pinned
             s.release(cur)
             cur = nxt
-            if not changed:
-                # At the fixpoint every edge is (node → component
-                # min): the labels are the edge list itself, plus a
-                # self-label for each component-min node (they carry
-                # no out-edge).
-                labels = cur.select(
-                    F.col("a").alias("doc_id"), F.col("b").alias("component")
+            if seen["unsettled"] == 0:
+                # every non-root label has one edge, to its root
+                root = cur.toDF("component", "_root", "_unsettled")
+                return s.keep(
+                    s.pin(
+                        labels.join(root, "component", "left").select(
+                            "doc_id",
+                            F.coalesce("_root", "component").alias("component"),
+                        )
+                    )
                 )
-                roots = nodes.join(
-                    labels.select("doc_id"), "doc_id", "left_anti"
-                ).select("doc_id", F.col("doc_id").alias("component"))
-                return s.keep(s.pin(labels.union(roots)))
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds; this bounds components of ~2^(max_iter/2) nodes — "
+            f"connected_components did not converge in {max_iter} star "
+            "rounds; this bounds components of ~2^(max_iter/2) labels — "
             "raise max_iter"
         )
+
+
+def _star(cur: DataFrame, large: bool) -> DataFrame:
+    """Large-star or small-star (Kiveris et al.) over the edge list
+    `cur` (a > b, distinct), returning one in the same form. With m(u)
+    the least of u and its neighbours, each node u links its selected
+    neighbours v straight to m(u): large selects v > u; small selects
+    v <= u and links u itself, so the u → m(u) chain survives.
+
+    Small-star sets `_unsettled` on the link of each node u of `cur`
+    with a smaller neighbour and more than one neighbour. There is
+    none exactly when `cur` is a star forest rooted at its component
+    minima: the fixpoint, which both stars return unchanged."""
+    e = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
+        cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+    m = (
+        e.groupBy("u")
+        .agg(F.min("v").alias("_mn"), F.count(F.lit(1)).alias("_deg"))
+        .select(
+            "u",
+            F.least("_mn", "u").alias("m"),
+            ((F.col("_mn") < F.col("u")) & (F.col("_deg") > 1)).alias(
+                "_unsettled"
+            ),
+        )
+    )
+    sel = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
+    out = (
+        e.join(m, "u")
+        .filter(sel)
+        .select(
+            F.col("v").alias("a"),
+            F.col("m").alias("b"),
+            F.lit(False).alias("_unsettled"),
+        )
+    )
+    if not large:
+        out = out.union(
+            m.select(F.col("u").alias("a"), F.col("m").alias("b"), "_unsettled")
+        )
+    return (
+        out.filter(F.col("a") != F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.max("_unsettled").alias("_unsettled"))
+    )
 
 
 def decontaminate(
@@ -1199,7 +1184,7 @@ def decontaminate_frac(
     broadcast, corpus streams map-side, one per-doc aggregate.
     """
     # shingles() already returns a sorted DISTINCT array — no extra
-    # array_distinct pass (self-review r5).
+    # array_distinct pass.
     tr = train.select(
         F.col(id_col),
         shingles("tokens", n).alias("_sh"),

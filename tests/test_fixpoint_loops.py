@@ -1,8 +1,9 @@
-"""The count-stopped fixpoint loops (connected_components, kcore,
-ktruss, khop_distances, sssp_distances) read their stopping count
-from an Observation on the round's own pin: no separate probe action
-runs, empty and NULL-only inputs keep their documented answers, and
-the answer does not depend on the physical configuration."""
+"""The count-stopped fixpoint loops (connected_components' label
+propagation and star phases, kcore, ktruss, khop_distances,
+sssp_distances) read their stopping count from an Observation filled
+by the round's own pin: no separate probe action runs, empty and
+NULL-only inputs keep their documented answers, and the answer does
+not depend on the physical configuration."""
 
 import pytest
 
@@ -10,6 +11,7 @@ from miningfrequentpattern_spark.operators import dedup, graph
 
 TRIANGLE_PENDANT = [(1, 2), (2, 3), (1, 3), (3, 4)]
 PATH = [(1, 2), (2, 3), (3, 4)]
+CHAIN = [(i, i + 1) for i in range(12)]
 
 
 def _edges(spark, rows, cols="src long, dst long"):
@@ -27,6 +29,13 @@ CASES = {
             _edges(sp, PATH + [(10, 11), (12, 12)], "doc_a long, doc_b long")
         ),
         {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (12, 12)},
+    ),
+    # longer than label propagation's rounds: the star phase finishes
+    "cc_chain": (
+        lambda sp: dedup.connected_components(
+            _edges(sp, CHAIN, "doc_a long, doc_b long")
+        ),
+        {(i, 0) for i in range(13)},
     ),
     "cc_empty": (
         lambda sp: dedup.connected_components(
@@ -120,19 +129,21 @@ CONFIGS = {
     "partitions_1": {"spark.sql.shuffle.partitions": "1"},
     "partitions_200": {"spark.sql.shuffle.partitions": "200"},
     "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+    "broadcast_off": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
 }
 
 
 @pytest.mark.parametrize("cell", sorted(CONFIGS))
 def test_fixpoint_loops_config_invariant(spark, cell):
-    """AQE re-planning and the shuffle width must not change what a
-    loop reads from its observed counters, nor its answer."""
+    """AQE re-planning, the shuffle width and the join strategy must
+    not change what a loop reads from its observed counters, nor its
+    answer."""
     conf = CONFIGS[cell]
     old = {k: spark.conf.get(k) for k in conf}
     for k, v in conf.items():
         spark.conf.set(k, v)
     try:
-        for case in ("cc", "kcore", "ktruss", "khop", "sssp"):
+        for case in ("cc", "cc_chain", "kcore", "ktruss", "khop", "sssp"):
             run, expected = CASES[case]
             assert set(map(tuple, run(spark).collect())) == expected, case
     finally:

@@ -509,31 +509,17 @@ def test_empty_corpus_topk_schema_takes_each_sides_id_type(spark):
         assert got["neighbor_id"] == "bigint", (op.__name__, got)
 
 
-def _cc_maps(spark, pairs):
-    """(label-propagation map, star map) for a list of (a, b) pairs."""
-    from miningfrequentpattern_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    lp = {
-        r.doc_id: r.component
-        for r in connected_components(df, max_iter=200).collect()
-    }
-    st = {
-        r.doc_id: r.component
-        for r in connected_components_star(df).collect()
-    }
-    return lp, st
-
-
-def test_star_components_equal_label_propagation(spark):
-    """connected_components_star must agree with the recursive-CTE-
-    oracle-certified label-propagation operator on adversarial
-    shapes: cliques, a long path, a star, two components, and a
-    random graph (seeded)."""
+def test_connected_components_match_union_find(spark):
+    """connected_components labels every doc with its component's
+    least id, as a union-find does, on adversarial shapes: cliques, a
+    path, a star, two components, a seeded random graph, and a 40-hop
+    path listed both low id first and high id first. The shapes share
+    one call on disjoint id ranges, so settled and unsettled
+    components sit in one graph; the long paths take it past label
+    propagation into star rounds."""
     import random
+
+    from .test_properties import union_find_components
 
     rng = random.Random(7)
     shapes = {
@@ -545,99 +531,104 @@ def test_star_components_equal_label_propagation(spark):
         "random": list({(min(a, b), max(a, b))
                         for a, b in (sorted(rng.sample(range(40), 2))
                                      for _ in range(50))}),
+        "path_40_hops": [(i, i + 1) for i in range(40)],
+        "reversed_ids": [(40 - i, 39 - i) for i in range(40)],
     }
-    for name, pairs in shapes.items():
-        lp, st = _cc_maps(spark, pairs)
-        assert st == lp, (name, {k: (lp[k], st[k]) for k in lp
-                                 if lp[k] != st.get(k)})
+    pairs = [
+        (a + 100 * k, b + 100 * k)
+        for k, edges in enumerate(shapes.values())
+        for a, b in edges
+    ]
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    got = {
+        r.doc_id: r.component for r in connected_components(df).collect()
+    }
+    want = union_find_components(pairs)
+    # a wrong label's shape is its id // 100
+    assert got == want, {
+        v: (want[v], got.get(v)) for v in want if want[v] != got.get(v)
+    }
 
 
 def test_star_components_survive_chain_that_breaks_propagation(spark):
-    """The cliff the star variant exists for: a 40-hop path exhausts
-    label propagation at max_iter=20 (it RAISES — partial labels
-    would be wrong), while star contraction converges in O(log n)
-    rounds and labels every node with the path minimum."""
-    import pytest
-
-    from miningfrequentpattern_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
+    """A 40-hop path is longer than label propagation's rounds: the
+    star phase must finish it and label every node with the path
+    minimum. Star rounds beyond max_iter RAISE — partial labels would
+    be wrong, not slow."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=10)
     got = {
         r.doc_id: r.component
-        for r in connected_components_star(chain).collect()
+        for r in connected_components(chain).collect()
     }
     assert got == {i: 0 for i in range(41)}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=1)
+
+
+def _path(n):
+    return [(i, i + 1) for i in range(n)]
+
+
+# name -> (edges, Observation reads that pass before one raises)
+CC_GRAPHS = {
+    # label propagation settles in round 3: raise at its second read
+    "lp_settles": (_path(3), 1),
+    # 4 propagation rounds, the label graph, then star rounds: raise
+    # at the second star round's read
+    "star_chain": (_path(24), 6),
+    # propagation settles in its last round, unconfirmed: the label
+    # graph is empty, and its read is the last
+    "empty_label_graph": (_path(5), 4),
+}
 
 
 def test_cc_loops_release_per_round_checkpoints(spark):
-    """Self-review r5: the per-round localCheckpoints inside both CC
-    loops must be FREED as generations retire — only the returned
-    result's pinned blocks (plus pre-existing ones) may remain after
-    the operator returns, regardless of how many rounds ran. (New
-    persistent RDDs counted by id: an earlier test's may be collected
-    meanwhile.)"""
-    from miningfrequentpattern_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(24)], "doc_a long, doc_b long"
-    )
-    for op in (
-        lambda: connected_components(chain, max_iter=40),
-        lambda: connected_components_star(chain),
-    ):
+    """The per-round pins of both connected-components phases must be
+    FREED as generations retire — only the returned result's pinned
+    blocks (plus pre-existing ones) may remain after the operator
+    returns, regardless of how many rounds ran. (New persistent RDDs
+    counted by id: an earlier test's may be collected meanwhile.)"""
+    for name, (pairs, _) in CC_GRAPHS.items():
+        edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
         base = _persistent_ids(spark)
-        assert op().count() == 25
+        assert connected_components(edges).count() == len(pairs) + 1, name
         # one pinned generation: the returned labels
         new = _persistent_ids(spark) - base
-        assert len(new) <= 1, new
+        assert len(new) <= 1, (name, new)
 
 
 def _persistent_ids(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-@pytest.mark.parametrize(
-    "op", ["connected_components", "connected_components_star"]
-)
-def test_cc_loops_free_storage_when_probe_raises(spark, monkeypatch, op):
-    """A convergence read that raises must not leave the loop's
-    caches or pinned generations behind: no persistent RDD is added.
-    (Compared by id: an earlier test's RDD may be collected
-    meanwhile.)"""
+@pytest.mark.parametrize("graph", sorted(CC_GRAPHS))
+def test_cc_loops_free_storage_when_probe_raises(spark, monkeypatch, graph):
+    """A convergence read that raises must not leave the operator's
+    caches or pinned generations behind, in either phase: no
+    persistent RDD is added. Both phases read their stopping counts
+    from Observations, after the round's pin is taken. (Compared by
+    id: an earlier test's RDD may be collected meanwhile.)"""
     from pyspark.sql import Observation
 
-    from miningfrequentpattern_spark.operators import dedup
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)], "doc_a long, doc_b long"
-    )
+    pairs, passing = CC_GRAPHS[graph]
+    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     base = _persistent_ids(spark)
+    real_get = Observation.get.fget
+    reads = []
 
-    def boom(self):
-        raise RuntimeError("probe failed")
+    def get(self):
+        reads.append(self)
+        if len(reads) > passing:
+            raise RuntimeError("probe failed")
+        return real_get(self)
 
-    if op == "connected_components":
-        # label propagation reads its stopping count from the
-        # Observation on the round's pin, after that pin is taken
-        monkeypatch.setattr(Observation, "get", property(boom))
-    else:
-        # the star form still probes with isEmpty (on the classic
-        # DataFrame subclass; patching pyspark.sql.DataFrame would
-        # not reach it)
-        monkeypatch.setattr(type(chain), "isEmpty", boom)
+    monkeypatch.setattr(Observation, "get", property(get))
     with pytest.raises(RuntimeError, match="probe failed"):
-        getattr(dedup, op)(chain)
+        connected_components(edges)
     monkeypatch.undo()
+    assert len(reads) == passing + 1
     assert _persistent_ids(spark) - base == set()
 
 

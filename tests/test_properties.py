@@ -271,30 +271,10 @@ def test_triangle_counts_match_brute_force(spark, edges):
     assert got == want
 
 
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 14), st.integers(0, 14)),
-        min_size=1,
-        max_size=20,
-    )
-)
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_star_components_match_python_union_find(spark, edges):
-    """connected_components_star vs a pure-Python union-find on
-    arbitrary messy edge lists (self-loops, duplicates, both
-    directions) — component-min labels must agree exactly for EVERY
-    edge endpoint, including self-loop-only singletons."""
-    from miningfrequentpattern_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        r["doc_id"]: r["component"]
-        for r in connected_components_star(df).collect()
-    }
-    # reference: union-find, labels = min of each component
+def union_find_components(edges) -> dict[int, int]:
+    """Reference connected components: each endpoint of `edges` (a, b)
+    mapped to the least id of its component, by union-find. Every
+    endpoint gets a label, a self-loop-only node its own."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -305,21 +285,40 @@ def test_star_components_match_python_union_find(spark, edges):
         return x
 
     for a, b in edges:
-        find(a), find(b)  # register EVERY endpoint (self-loops too)
-        if a != b:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
     groups: dict[int, list[int]] = {}
     for v in list(parent):
         groups.setdefault(find(v), []).append(v)
-    want = {
-        v: min(members) for members in groups.values() for v in members
+    return {v: min(members) for members in groups.values() for v in members}
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 14), st.integers(0, 14)),
+        min_size=1,
+        max_size=20,
+    )
+)
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_connected_components_match_python_union_find(spark, edges):
+    """connected_components vs a pure-Python union-find on arbitrary
+    messy edge lists (self-loops, duplicates, both directions) —
+    component-min labels must agree exactly for EVERY edge endpoint,
+    including self-loop-only singletons, which a label taken from
+    the self-loop-free edges alone would miss."""
+    from miningfrequentpattern_spark.operators.dedup import (
+        connected_components,
+    )
+
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {
+        r["doc_id"]: r["component"]
+        for r in connected_components(df).collect()
     }
-    # EVERY endpoint gets a label — a self-loop-only node is its own
-    # singleton component, exactly as connected_components labels it
-    # (self-review r5: the first version of this test masked that).
-    assert got == want
+    assert got == union_find_components(edges)
 
 
 @given(
@@ -381,11 +380,12 @@ def test_durable_checkpoint_mode_matches_local(spark, monkeypatch):
     executor-loss-recoverable path the r4 advice asked for) must be a
     pure fault-tolerance choice: identical results to the default
     local pin for every iterative operator that takes it, and the
-    same counts observed on the pins of the loops that stop on one."""
-    from miningfrequentpattern_spark.operators import ckpt
+    same counts observed by the loops that stop on one — both phases
+    of connected components included."""
+    from pyspark.sql import Observation
+
     from miningfrequentpattern_spark.operators.dedup import (
         connected_components,
-        connected_components_star,
     )
     from miningfrequentpattern_spark.operators.graph import (
         kcore,
@@ -404,6 +404,10 @@ def test_durable_checkpoint_mode_matches_local(spark, monkeypatch):
         [(0, 1), (1, 2), (2, 0), (3, 4), (5, 5), (2, 3)],
         "doc_a long, doc_b long",
     )
+    # long enough to leave label propagation for star rounds
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+    )
     g = edges.selectExpr("doc_a AS src", "doc_b AS dst")
     wg = g.withColumn("weight", (F.col("src") + 1).cast("double"))
     seeds = spark.createDataFrame([(0,), (3,)], "id long")
@@ -415,19 +419,18 @@ def test_durable_checkpoint_mode_matches_local(spark, monkeypatch):
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
+    # every count a loop stops on is read through Observation.get
     seen = []
-    real_pin = ckpt.Scope.pin
+    real_get = Observation.get.fget
 
-    def pin(self, df, **metrics):
-        out = real_pin(self, df, **metrics)
-        if metrics:
-            seen.append(out[1])
-        return out
+    def get(self):
+        seen.append(real_get(self))
+        return seen[-1]
 
-    monkeypatch.setattr(ckpt.Scope, "pin", pin)
+    monkeypatch.setattr(Observation, "get", property(get))
     for fn in (
         lambda d: connected_components(edges, durable=d),
-        lambda d: connected_components_star(edges, durable=d),
+        lambda d: connected_components(chain, durable=d),
         lambda d: kcore(g, k=2, durable=d),
         lambda d: ktruss(g, k=3, durable=d),
         lambda d: pagerank(g, iterations=3, durable=d),
